@@ -11,9 +11,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
     // Durable seam artifacts (dd signature, dd13 postings, mm05/mm06
-    // pair set): pass 1 builds each at most once, pass 2 reads parquet —
-    // the production precompute-once shape, disclosed in the record as
-    // seam_cache. The bench uses a FRESH cache dir every invocation so
+    // pair set, all under the one Seams.CacheDirKey): pass 1 builds
+    // each at most once, pass 2 reads parquet — the production
+    // precompute-once shape, disclosed in the record as seam_cache.
+    // The bench uses a FRESH cache dir every invocation so
     // pass 1 always pays each seam's cold build exactly once in-process;
     // Seams times those builds and the record carries them as
     // `seam_build` (the one-time price the warm min-of-2 numbers
@@ -23,7 +24,6 @@ object Bench {
     val seamDir = java.nio.file.Files
       .createTempDirectory("graft-seam-bench").toString
     spark.conf.set(Seams.CacheDirKey, seamDir)
-    spark.conf.set(graft.dedup.Dedup.SigCacheDirKey, seamDir)
     System.err.println(s"[bench] durable seam cache (fresh): $seamDir")
     // Two-level-scan bucket sizing from measured density: target
     // rows-per-(key, bucket) ≈ 8·√(rows per ticker), so both the local

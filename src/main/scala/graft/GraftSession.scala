@@ -45,28 +45,19 @@ object GraftSession {
     s
   }
 
-  /** Application-end drain for the JVM-wide (session, dir)-keyed
-    * operator caches (Dedup's signature/pair seams, TextAnalysis's
-    * trained-model entries). resetCaches/releaseCaches is the
-    * per-session eviction path, but a session stopped WITHOUT it pins
-    * its entries — and their frames — in the maps for the JVM
-    * lifetime. This listener makes the documented contract automatic:
-    * when the SparkContext stops (one per JVM, so every keyed session
-    * is dead at that point), every entry is dropped. Registered at
-    * most once per context. */
+  /** Application-end drain for the JVM-wide [[Seams.memo]] entries.
+    * resetCaches is the per-session eviction path, but a session
+    * stopped WITHOUT it pins its entries — and their frames — in the
+    * memo for the JVM lifetime. This listener makes the contract
+    * automatic: when the SparkContext stops (one per JVM, so every
+    * keyed session is dead at that point), every entry is dropped.
+    * Registered at most once per context. */
   private[graft] final class CacheDrainListener
       extends org.apache.spark.scheduler.SparkListener {
     override def onApplicationEnd(
         end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-      drainOperatorCaches()
+      Seams.releaseAll()
   }
-
-  /** The listener's action, callable directly (spec pin): drop every
-    * entry in the JVM-wide operator caches. Returns entries dropped. */
-  private[graft] def drainOperatorCaches(): Int =
-    graft.dedup.Dedup.drainAllCaches() +
-      graft.text.TextAnalysis.drainAllCaches() +
-      graft.similarity.Similarity.drainAllCaches()
 
   private val drainInstalled =
     java.util.Collections.synchronizedMap(
@@ -74,8 +65,8 @@ object GraftSession {
 
   /** Register the [[CacheDrainListener]] on this session's context,
     * once per context (getOrCreate hands the same context to every
-    * caller; a duplicate listener would just double-drain a pair of
-    * empty maps, but once is the contract). */
+    * caller; a duplicate listener would just drain an empty memo
+    * twice, but once is the contract). */
   def installCacheDrain(s: SparkSession): Unit =
     drainInstalled.synchronized {
       val sc = s.sparkContext
@@ -85,30 +76,29 @@ object GraftSession {
       }
     }
 
-  /** Turn on durable seam artifacts (Seams + the minhash sig seam) for
-    * the harness mains. NOT set for unit tests (they pin the
-    * localCheckpoint fallback and their own sigCacheDir temp dirs).
-    * Artifacts are content-fingerprint-keyed, so a driver-side testdata
-    * regeneration invalidates them automatically. */
+  /** Turn on durable seam artifacts ([[Seams.durable]], including the
+    * minhash sig seam) for the harness mains. NOT set for unit tests
+    * (they pin the localCheckpoint fallback and set their own temp
+    * dirs). Artifacts are content-fingerprint-keyed, so a driver-side
+    * testdata regeneration invalidates them automatically. */
   def enableDurableSeams(s: SparkSession): String = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SEAM_DIR", "/tmp/graft-seam-cache")
     s.conf.set(Seams.CacheDirKey, dir)
-    s.conf.set(graft.dedup.Dedup.SigCacheDirKey, dir)
     dir
   }
 
-  /** Drop ALL session-pinned caches — the dedup signature seam, cached
-    * tables, and leftover persisted/localCheckpoint'ed RDDs. The
-    * harness mains (Bench, Verify) call this after EVERY query:
-    * checkpoint blocks are not evictable by the unified memory
+  /** Drop ALL session-pinned caches — every [[Seams.memo]] entry of
+    * `s` (released first, so no memo can serve a frame the sweep below
+    * drops), cached tables, and leftover persisted/localCheckpoint'ed
+    * RDDs. The harness mains (Bench, Verify) call this after EVERY
+    * query: checkpoint blocks are not evictable by the unified memory
     * manager, so left in place they squeeze execution memory and make
     * every LATER heavy join spill slower (an idle machine reads as
-    * contended — the round-6 161 s vs 81 s full-suite gap). One
-    * definition so the two harnesses can never drift. */
+    * contended — the round-6 161 s vs 81 s full-suite gap). The sweep
+    * is context-wide: safe only when `s` is the sole session using the
+    * context. One definition so the two harnesses can never drift. */
   def resetCaches(s: SparkSession): Unit = {
-    graft.dedup.Dedup.releaseCaches(s)
-    graft.text.TextAnalysis.releaseCaches(s)
-    graft.similarity.Similarity.releaseCaches(s)
+    Seams.release(s)
     s.catalog.clearCache()
     s.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

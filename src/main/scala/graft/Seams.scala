@@ -2,34 +2,46 @@ package graft
 
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** Durable materialization for expensive SHARED SEAMS — plan subtrees
-  * that feed several consumers (dd13's gram postings, mm05/mm06's
-  * verified pHash pairs, the dd03/dd05/dd07 minhash signatures).
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** Shared seams: plan subtrees that feed several consumers (dd13's gram
+  * postings, mm05/mm06's verified pHash pairs, the dd03/dd05/dd07
+  * minhash signatures), and the one session memo that holds them.
   *
-  * A production pipeline checkpoints these to parquet: at 100 TB the
-  * seam is hours of CPU and downstream jobs (dedup, clustering,
-  * decontamination, audits) run at different times against the same
-  * frozen corpus. Locally the same artifact keeps Verify and both
-  * Bench passes from re-running the explode+distinct subtree that
+  * [[durable]] — a production pipeline checkpoints these to parquet:
+  * at 100 TB the seam is hours of CPU and downstream jobs (dedup,
+  * clustering, decontamination, audits) run at different times against
+  * the same frozen corpus. Locally the same artifact keeps Verify and
+  * both Bench passes from re-running the explode+distinct subtree that
   * dominates the seam queries' wall time — the round-8 verdict's
   * dd13/mm06 ask.
   *
   * Correctness: the artifact is the seam's EXACT output. Staleness is
   * impossible-by-key: the artifact name embeds a fingerprint of the
-  * corpus directory's (name, size, mtime) listing, so a driver-side
-  * testdata regeneration — even in place at the same path — yields a
-  * different key and a fresh build (the memory-file lesson: testdata
-  * dtypes/content DO drift between rounds). Completeness = Spark's own
-  * `_SUCCESS` marker; a half-written artifact from a crashed writer
-  * has no marker and is rebuilt whole. One concurrent writer per
-  * corpus is the caller's job (same contract as
+  * corpus directory's (relative path, size, mtime) listing, so a
+  * driver-side testdata regeneration — even in place at the same path
+  * — yields a different key and a fresh build (the memory-file lesson:
+  * testdata dtypes/content DO drift between rounds). Completeness =
+  * Spark's own `_SUCCESS` marker; a half-written artifact from a
+  * crashed writer has no marker and is rebuilt whole. One concurrent
+  * writer per corpus is the caller's job (same contract as
   * [[graft.streaming.QueueLog.append]]).
   *
   * With no cache dir configured (unit tests), the seam falls back to
   * `localCheckpoint` — the previous, session-scoped behavior.
+  *
+  * [[memo]] — every value an operator builds once per (session,
+  * corpus) and shares across queries (the dedup signature and pair
+  * seams, dd25/sim36's stores, the trained BPE/logistic models) lives
+  * here, and only here. [[release]] (called by
+  * [[GraftSession.resetCaches]]) and [[releaseAll]] (the
+  * application-end drain) therefore cover every memo, present and
+  * future, with no per-module hook to forget.
   */
 object Seams {
 
@@ -38,12 +50,22 @@ object Seams {
   val CacheDirKey = "spark.graft.seamCacheDir"
 
   /** Content fingerprint of a corpus dir: sha-256 over the sorted
-    * (name, size, mtime) listing, 16 hex bytes. Catches in-place
-    * regeneration, which a path digest alone would miss. */
+    * (relative path, size, mtime) listing of every file beneath it,
+    * 16 hex bytes. Catches in-place regeneration, which a path digest
+    * alone would miss. The walk descends into directory tables (Spark
+    * writes each table as a dir of part files); for a flat-file corpus
+    * the listing is just its top-level (name, size, mtime) entries, so
+    * the artifact names keyed by it stay stable. */
   def corpusFingerprint(d: String): String = {
-    val files = Option(new File(d).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+    def walk(dir: File, prefix: String): Seq[(String, File)] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        val rel = prefix + f.getName
+        if (f.isDirectory) walk(f, rel + "/")
+        else if (f.isFile) Seq(rel -> f)
+        else Nil
+      }
+    val files = walk(new File(d), "").sortBy(_._1)
+      .map { case (rel, f) => s"$rel:${f.length}:${f.lastModified}" }
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(files.mkString("\n").getBytes(UTF_8))
       .take(16).map("%02x".format(_)).mkString
@@ -69,10 +91,7 @@ object Seams {
 
   def buildTimes: Map[String, Double] = built.toMap
 
-  /** The artifact path itself, for callers with their own config key
-    * (the minhash sig seam predates [[CacheDirKey]] and keeps
-    * `spark.graft.sigCacheDir`). */
-  def artifact(s: SparkSession, corpusDir: String, name: String,
+  private def artifact(s: SparkSession, corpusDir: String, name: String,
       cacheDir: String)(build: => DataFrame): DataFrame = {
     val art = new File(cacheDir,
       s"$name-${corpusFingerprint(corpusDir)}").toString
@@ -86,5 +105,61 @@ object Seams {
       }
     }
     s.read.parquet(art)
+  }
+
+  /** One build per key. The map holds a task, never runs one: memo
+    * builds nest (the pair seam's build asks for the signature memo),
+    * and `computeIfAbsent` forbids touching the map from inside its
+    * mapping function. The first caller runs the task; concurrent
+    * callers ([[Par]] arms) block on it. A failed task is dropped, so
+    * the next call builds again. */
+  private type Key = (SparkSession, String, String)
+  private val memos = new ConcurrentHashMap[Key, FutureTask[Any]]
+
+  /** `build` once per (session, corpus dir, name) and share the result
+    * until [[release]]. The build picks how its frames are stored
+    * (localCheckpoint, persist, [[durable]]); the memo holds them and
+    * unpersists them on release. The files under `corpusDir` are
+    * assumed immutable for the session. */
+  def memo[A](s: SparkSession, corpusDir: String, name: String)
+      (build: => A): A = {
+    val key = (s, corpusDir, name)
+    val task = memos.computeIfAbsent(key, _ => new FutureTask[Any](() => build))
+    task.run() // no-op unless this caller is the first
+    try task.get().asInstanceOf[A]
+    catch { case e: ExecutionException =>
+      memos.remove(key, task)
+      throw e.getCause
+    }
+  }
+
+  /** Drop `s`'s memo entries and unpersist the frames they hold. Other
+    * sessions' entries stay. */
+  def release(s: SparkSession): Unit = drop(_._1 eq s)
+
+  /** Drop EVERY memo entry — the application-end drain: when the (one
+    * per JVM) SparkContext stops, every keyed session is dead, and the
+    * map's strong references are all that keep them and their frames
+    * alive. Returns the number of entries dropped. */
+  def releaseAll(): Int = drop(_ => true)
+
+  /** Unpersist is best-effort: the blocks of a stopped context are
+    * already gone, and a build still running is dropped unread. */
+  private def drop(which: Key => Boolean): Int =
+    memos.keySet.asScala.filter(which).toSeq.count { k =>
+      val task = memos.remove(k)
+      if (task != null && task.isDone)
+        try frames(task.get()).foreach(_.unpersist())
+        catch { case NonFatal(_) => () }
+      task != null
+    }
+
+  /** The frames inside a memoized value: a frame, or any tuple or
+    * collection of them. */
+  private def frames(v: Any): Iterator[Dataset[_]] = v match {
+    case f: Dataset[_] => Iterator(f)
+    case xs: Iterable[_] => xs.iterator.flatMap(frames)
+    case p: Product => p.productIterator.flatMap(frames)
+    case _ => Iterator.empty
   }
 }

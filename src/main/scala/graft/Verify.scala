@@ -18,12 +18,13 @@ object Verify {
     * names. Factored out of `main` so VerifySpec can pin the red-row
     * behavior without stopping the shared test session. */
   /** `resetBetween=false` is for SPECS ONLY: the per-query
-    * GraftSession.resetCaches is main-harness hygiene, and its
-    * context-wide unpersist is safe only when this is the sole thread
-    * using the context — under sbt's parallel suites it races every
-    * OTHER suite's in-flight localCheckpoint blocks (the r19-open
-    * IvfStoreSpec CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND flake). The main
-    * below always runs with the default (true). */
+    * GraftSession.resetCaches is main-harness hygiene. Its memo release
+    * touches only this session, but its context-wide unpersist is safe
+    * only when this is the sole thread using the context — under sbt's
+    * parallel suites it races every OTHER suite's in-flight
+    * localCheckpoint blocks (the r19-open IvfStoreSpec
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND flake). The main below always
+    * runs with the default (true). */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       queries: Iterable[(String, (SparkSession, String) => DataFrame)],
       resetBetween: Boolean = true)

@@ -132,10 +132,8 @@ object Dedup {
     * differ only in projection/presentation, so the candidate join and
     * exact verify are never paid twice in one run.
     * [[ngramPairsPlan]] is the same plan left lazy for plan tests. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
   private def ngramPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.computeIfAbsent((s, d), _ =>
+    graft.Seams.memo(s, d, "dd-pairs")(
       verifiedPairsOn(minhashSigCached(s, d)).localCheckpoint())
 
   /** The dd03 plan fully lazy (no persist/checkpoint) — plan-shape
@@ -305,91 +303,22 @@ object Dedup {
     * CPU pass and feeds FOUR plan branches per query (two band sides,
     * two verify attaches) across THREE queries (dd03/dd05/dd07) —
     * uncached, Spark recomputes it per branch per query (12+ scans in
-    * one bench run). A production pipeline would checkpoint signatures
-    * to parquet at this exact seam; within one JVM session a persisted
-    * frame is the same thing without the filesystem round-trip. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
+    * one bench run). With a seam cache dir the signatures go to the
+    * durable `minhash-sig` artifact (survives session restarts and
+    * executor loss, where persisted blocks die and must be
+    * recomputed); without one a persisted frame is the same thing
+    * without the filesystem round-trip. */
   private def minhashSigCached(s: SparkSession, d: String): DataFrame =
-    sigCache.computeIfAbsent((s, d), _ =>
-      s.conf.get(SigCacheDirKey, null) match {
-        case null =>
-          minhashSig(s, d)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        case cacheDir => durableSig(s, d, cacheDir)
-      })
-
-  /** Config key: when set, the signature stage is checkpointed to
-    * parquet under this directory instead of session-scoped storage. */
-  val SigCacheDirKey = "spark.graft.sigCacheDir"
-
-  /** The durable variant of the signature seam: compute-once-to-parquet,
-    * read-back-everywhere. Survives session restarts AND executor loss
-    * (where persist/localCheckpoint data dies and must be recomputed) —
-    * the production shape for a 100 TB corpus, where the signature pass
-    * is hours of CPU and downstream jobs (dedup, clustering,
-    * decontamination) run at different times against the same frozen
-    * corpus. The artifact is keyed by the corpus path (sha-256, so any
-    * path maps to one flat dir name) and assumed immutable-per-corpus,
-    * like the corpus itself; completeness = Spark's own _SUCCESS marker,
-    * and a half-written artifact from a crashed writer is overwritten
-    * whole. Single concurrent writer per corpus is the caller's job
-    * (same contract as [[graft.streaming.QueueLog.append]]). */
-  private def durableSig(s: SparkSession, d: String, cacheDir: String)
-      : DataFrame =
-    // keyed by CONTENT fingerprint, not path digest: the driver
-    // regenerates testdata in place between rounds, and a stale
-    // signature artifact would silently poison every dd query
-    graft.Seams.artifact(s, d, "minhash-sig", cacheDir)(minhashSig(s, d))
-
-  /** Drop this session's cached signature/pair frames (storage AND the
-    * checkpointed pair set). The caches assume the files under `d` are
-    * immutable for the session — call this if a corpus is regenerated
-    * in place, or when a long-lived session is done with dedup and the
-    * pinned storage should go back to the pool. (On executor loss a
-    * localCheckpoint'ed frame is unrecoverable — release and recompute;
-    * a production pipeline would checkpoint signatures to parquet at
-    * this seam instead, trading the rebuild for a durable artifact.) */
-  def releaseCaches(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    Seq(sigCache, pairsCache).foreach { cache =>
-      cache.keySet.asScala.filter(_._1 eq s).toSeq.foreach { k =>
-        Option(cache.remove(k)).foreach(_.unpersist())
-      }
+    graft.Seams.memo(s, d, "minhash-sig") {
+      if (s.conf.getOption(graft.Seams.CacheDirKey).isDefined)
+        graft.Seams.durable(s, d, "minhash-sig")(minhashSig(s, d))
+      else
+        minhashSig(s, d)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    dd25Cache.keySet.asScala.filter(_._1 eq s).toSeq.foreach { k =>
-      Option(dd25Cache.remove(k)).foreach { case (a, b) =>
-        a.unpersist(); b.unpersist()
-      }
-    }
-  }
 
-  /** JVM-wide drain for the application-end listener
-    * ([[graft.GraftSession.installCacheDrain]]): when the (one per
-    * JVM) SparkContext stops, every session keyed in these maps is
-    * dead, so drop EVERY entry. unpersist is best-effort — the blocks
-    * die with the context anyway; the point is releasing the map's
-    * strong references so the dead sessions and their frames are
-    * collectable. Returns the number of entries dropped (spec pin). */
-  private[graft] def drainAllCaches(): Int = {
-    import scala.jdk.CollectionConverters._
-    val fromPairs = Seq(sigCache, pairsCache).map { cache =>
-      val ks = cache.keySet.asScala.toSeq
-      ks.foreach { k =>
-        Option(cache.remove(k)).foreach { f =>
-          try f.unpersist() catch { case _: Throwable => () }
-        }
-      }
-      ks.size
-    }.sum
-    val ks25 = dd25Cache.keySet.asScala.toSeq
-    ks25.foreach { k =>
-      Option(dd25Cache.remove(k)).foreach { case (a, b) =>
-        try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () }
-      }
-    }
-    fromPairs + ks25.size
-  }
+  // alias of Seams.CacheDirKey: the e2ebench harness compiles against it
+  val SigCacheDirKey = graft.Seams.CacheDirKey
 
   /** Candidate pairs (id_a < id_b) from the banded-signature equi-join.
     * Candidate generation never touches the shingle arrays: bands carry
@@ -2073,7 +2002,7 @@ object Dedup {
     // actions run (guide §2.6). Same rows either way; the checkpoint
     // is narrow metadata (no text columns).
     val baseF = graft.Par.async {
-      curationAttrsOn(s, docsAug(s, d)).localCheckpoint()
+      curationAttrsOn(docsAug(s, d)).localCheckpoint()
     }
     val labels = connectedComponentsStar(
       ngramPairs(s, d).select(col("id_a").as("src"), col("id_b").as("dst")))
@@ -2091,8 +2020,7 @@ object Dedup {
     * and hashes; extracting it keeps the batch (dd24) and incremental
     * (dd25) pipelines formula-identical BY CONSTRUCTION, which is what
     * dd25's full-recompute oracle equality rests on. */
-  private[graft] def curationAttrsOn(s: SparkSession, docs: DataFrame)
-      : DataFrame = {
+  private[graft] def curationAttrsOn(docs: DataFrame): DataFrame = {
     val toks = split(col("text"), " ")
     val stopHits =
       size(expr("filter(split(text, ' '), t -> t IN ('the','a','of'))"))
@@ -2105,7 +2033,7 @@ object Dedup {
         col("uniq") * 2.0 + col("stopr") * 4.0 +
           when(col("n_tokens") >= graft.text.TextAnalysis.MinTokens, 0.5)
             .otherwise(-1.0) - 1.5)
-    val rep = graft.text.TextAnalysis.repetitionOn(s, docs)
+    val rep = graft.text.TextAnalysis.repetitionOn(docs)
       .select(col("doc_id"), col("verdict"))
     base.join(rep, Seq("doc_id"), "left")
       .withColumn("verdict", coalesce(col("verdict"), lit("ok")))
@@ -2290,10 +2218,8 @@ object Dedup {
     * corrupting the CC contraction (and CurationIncSpec's
     * isHist(node < 5000000) with it). Guarded loudly here: one
     * column-pruned MAX scan, cached per (session, corpus). */
-  private val dd25MaxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]
   private def dd25GuardIds(s: SparkSession, d: String): Unit = {
-    val mx = dd25MaxCache.computeIfAbsent((s, d), _ =>
+    val mx = graft.Seams.memo(s, d, "dd25-maxid")(
       Tables.documents(s, d).agg(max(col("doc_id"))).first().getLong(0))
     require(mx < 1000000L,
       s"dd25 fixture requires max(doc_id) < 1,000,000 (saw $mx): the " +
@@ -2339,11 +2265,9 @@ object Dedup {
     * only these metadata frames (the keeper store is #clusters rows;
     * the sig store is the same artifact any incremental near-dup
     * scheme persists — dd14/dd18's argument). */
-  private val dd25Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]
   private[graft] def dd25Stores(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    dd25Cache.computeIfAbsent((s, d), _ => {
+    graft.Seams.memo(s, d, "dd25-stores") {
       val sigStore = graft.Seams.durable(s, d, "dd25-sigstore") {
         val sg = withHashedShingles(s, dd25Hist(s, d))
           .select(col("doc_id"), col("hsh"))
@@ -2356,13 +2280,13 @@ object Dedup {
           .select(col("doc_id"), col("cluster_id"), col("hsh"), col("sig"))
       }
       val keepStore = graft.Seams.durable(s, d, "dd25-keepstore") {
-        val clustered = curationAttrsOn(s, dd25Hist(s, d))
+        val clustered = curationAttrsOn(dd25Hist(s, d))
           .join(sigStore.select(col("doc_id"), col("cluster_id")),
             Seq("doc_id"))
         electKeepers(clustered)
       }
       (sigStore, keepStore)
-    })
+    }
 
   /** dd25 — INCREMENTAL CURATION: today's selected corpus derived from
     * yesterday's stores + the increment, with history text NEVER
@@ -2413,7 +2337,7 @@ object Dedup {
     // is not needed until the post-CC candidate union — build it on a
     // second thread while the merge chain's sequential actions run.
     val incAttrsF = graft.Par.async {
-      curationAttrsOn(s, inc).localCheckpoint()
+      curationAttrsOn(inc).localCheckpoint()
     }
     // ONE materialization: this frame feeds the HI band side, BOTH
     // legs of the II candidate self-join, the verify hsh lookup, and

@@ -118,7 +118,6 @@ object Multimodal {
     * corpora (and the oracle a pure-SQL mirror on this corpus, where
     * nothing parses as an image). */
   def decodeFeatures(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     decodeFrames(s, media(s, d))
       .toDF()
       .orderBy(col("media_id"))

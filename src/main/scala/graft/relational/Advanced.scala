@@ -660,7 +660,6 @@ object Advanced {
     * mul/div/add are correctly rounded, so same shape ⇒ same bits. */
   def q47Interpolate(s: SparkSession, d: String): DataFrame = {
     val sparse = when(col("event_id") % 3 === 0, col("value"))
-    val obsPos = when(sparse.isNotNull, col("event_id"))
     val wPrev = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(col("user_id")).orderBy(col("event_id"))

@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampType}
 
 import graft.Tables
 

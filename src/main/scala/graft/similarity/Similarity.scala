@@ -2776,44 +2776,9 @@ object Similarity {
     *    parquet-backed stores).
     * Built once per (session, corpus), durable under the seam cache
     * like dd25's sig/keeper stores. */
-  private val sim36Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Session-scoped eviction for the sim36 store memo — the mirror of
-    * [[graft.dedup.Dedup.releaseCaches]], and wired into the same
-    * harness reset path (GraftSession.resetCaches). Without it the
-    * reset's context-wide unpersist kills the memoized frames'
-    * localCheckpoint blocks while the memo keeps serving them, and the
-    * next sim36/sim39 call reads dead blocks
-    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — the r19-open IvfStoreSpec
-    * failure). Under a seam cache dir the frames are parquet-backed
-    * and eviction merely costs a re-read. */
-  def releaseCaches(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    sim36Cache.keySet.asScala.filter(_._1 eq s).toSeq.foreach { k =>
-      Option(sim36Cache.remove(k)).foreach { case (a, b) =>
-        try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () }
-      }
-    }
-  }
-
-  /** JVM-wide drain for the application-end listener — see
-    * [[graft.dedup.Dedup.drainAllCaches]] for the contract. Returns
-    * entries dropped (CacheDrainSpec pin). */
-  private[graft] def drainAllCaches(): Int = {
-    import scala.jdk.CollectionConverters._
-    val ks = sim36Cache.keySet.asScala.toSeq
-    ks.foreach { k =>
-      Option(sim36Cache.remove(k)).foreach { case (a, b) =>
-        try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () }
-      }
-    }
-    ks.size
-  }
-
   private[graft] def sim36Stores(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    sim36Cache.computeIfAbsent((s, d), _ => {
+    graft.Seams.memo(s, d, "sim36-stores") {
       val centStore = graft.Seams.durable(s, d, "sim36-centstore") {
         centroids(s, normed(s, d).where(col("vec_id") % 5 =!= 0))
       }
@@ -2822,7 +2787,7 @@ object Similarity {
           centStore)
       }
       (centStore, assignStore)
-    })
+    }
 
   /** Nearest-cell assignment + exact-decimal squared residual — the
     * row shape the assignment store persists. Same plan as sim34's

@@ -462,7 +462,7 @@ object StreamedQueries {
     * produce byte-identical files; reusing the files IS that
     * guarantee, for free. */
   private def replayOrderedEmit(s: SparkSession, msgs: DataFrame,
-      order: org.apache.spark.sql.Column, runs: Int = 1)(
+      order: org.apache.spark.sql.Column, runs: Int)(
       topology: DataFrame => DataFrame,
       writer: (DataFrame, Long) => Unit): Unit = {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -2188,22 +2188,21 @@ object TextAnalysis {
     * the same N rounds as chained CTEs (pair count → 1-row best →
     * vocab rewrite) and expands placeholders through the same merge
     * chain — a hash match means DuckDB's from-scratch training picked
-    * the identical merge at every round. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Seq[(Int, String, String, String, Long)]]
-
-  /** Trained merges: (round, pair-in-placeholder-space (2 chars),
+    * the identical merge at every round.
+    *
+    * Trained merges: (round, pair-in-placeholder-space (2 chars),
     * left/right sides expanded to original chars, weighted count).
-    * Round k's merged symbol is chr(127+k). */
+    * Round k's merged symbol is chr(127+k). Trained once per (session,
+    * corpus, rounds) in the [[graft.Seams.memo]]. */
   private[graft] def bpeTrain(s: SparkSession, d: String, rounds: Int)
       : Seq[(Int, String, String, String, Long)] =
-    bpeCache.computeIfAbsent((s, d, rounds), _ =>
-      bpeTrainOn(s, Tables.documents(s, d), rounds))
+    graft.Seams.memo(s, d, s"bpe-$rounds")(
+      bpeTrainOn(Tables.documents(s, d), rounds))
 
   /** The training loop over any (text) frame — BpeTrainSpec pins the
     * trajectory against hand-computed BPE on a tiny corpus. */
-  private[graft] def bpeTrainOn(s: SparkSession, docs: DataFrame,
-      rounds: Int): Seq[(Int, String, String, String, Long)] = {
+  private[graft] def bpeTrainOn(docs: DataFrame, rounds: Int)
+      : Seq[(Int, String, String, String, Long)] = {
       var vocab = docs
         .select(explode(expr(
           "regexp_extract_all(text, '[a-z]+|[0-9]+', 0)")).as("tok"))
@@ -2450,12 +2449,11 @@ object TextAnalysis {
     * top-bigram ppm) sit at the fixture's p90 so the gate pins BOTH
     * verdict classes. */
   def repetitionFilter(s: SparkSession, d: String): DataFrame =
-    repetitionOn(s, Tables.documents(s, d)).orderBy(col("doc_id"))
+    repetitionOn(Tables.documents(s, d)).orderBy(col("doc_id"))
 
   /** txt37's algebra over ANY (doc_id, text) frame — dd24's composed
     * curation pipeline runs it on the augmented dedup corpus. */
-  private[graft] def repetitionOn(s: SparkSession, docs: DataFrame)
-      : DataFrame = {
+  private[graft] def repetitionOn(docs: DataFrame): DataFrame = {
     val P = 1000003L
     val words = docs
       .select(col("doc_id"), posexplode(expr(
@@ -2620,18 +2618,16 @@ object TextAnalysis {
             then cast(1 as bigint) else cast(0 as bigint) end as y""")
 
   /** txt38/txt40 shared: the 6 full-batch hard-sigmoid GD steps,
-    * trained ONCE per (session, dir) — the Dedup.pairsCache discipline:
-    * both consumers run in the same gate/bench session, and the 6
-    * corpus scans are the whole cost, so the 1-row-per-step frames are
+    * trained ONCE per (session, dir) in the [[graft.Seams.memo]]: both
+    * consumers run in the same gate/bench session, and the 6 corpus
+    * scans are the whole cost, so the 1-row-per-step frames are
     * checkpointed and shared rather than retrained per query. Returns
     * each step's report frame (txt38's rows) and the weights AFTER the
     * last step — the shipped model txt40 calibrates. */
-  private val lgdCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[DataFrame], DataFrame)]
   private def lgdTrained(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) =
-    lgdCache.computeIfAbsent((s, d),
-      _ => lgdTrain(s, lgdFeat(s, d), checkpointSteps = true))
+    graft.Seams.memo(s, d, "lgd-model")(
+      lgdTrain(s, lgdFeat(s, d), checkpointSteps = true))
 
   /** The txt38 training plan fully lazy (no checkpoint/cache) — plan-
     * shape tests inspect this; runtime goes through [[lgdTrained]].
@@ -2639,40 +2635,6 @@ object TextAnalysis {
   private[graft] def lgdTrainPlan(s: SparkSession, d: String): DataFrame = {
     val (steps, _) = lgdTrain(s, lgdFeat(s, d))
     steps.reduce(_ union _).orderBy(col("iter"))
-  }
-
-  /** Harness hook (GraftSession.resetCaches, between gated queries):
-    * drop this session's trained-model entries — the per-query cache
-    * hygiene unpersists the checkpoint blocks, so a surviving map entry
-    * would be a dangling frame (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), and
-    * bench isolation wants each query to pay its own training anyway.
-    * Mirror of [[graft.dedup.Dedup.releaseCaches]]. NOTE: eviction
-    * paths are this hook (via resetCaches/releaseCaches, per-session)
-    * and the application-end drain
-    * ([[graft.GraftSession.installCacheDrain]], JVM-wide at context
-    * stop) — a session-churning embedder inside a LONG-LIVED context
-    * should still call releaseCaches on teardown, since the listener
-    * only fires when the whole application ends. */
-  def releaseCaches(s: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    lgdCache.keySet.asScala.filter(_._1 eq s).toSeq
-      .foreach(k => lgdCache.remove(k))
-    bpeCache.keySet.asScala.filter(_._1 eq s).toSeq
-      .foreach(k => bpeCache.remove(k))
-  }
-
-  /** JVM-wide drain for the application-end listener — see
-    * [[graft.dedup.Dedup.drainAllCaches]] for the contract. Like
-    * [[releaseCaches]], dropping the map references is the whole job
-    * here: the checkpoint blocks die with the stopping context, and
-    * what outlives it is only this map's strong references. */
-  private[graft] def drainAllCaches(): Int = {
-    import scala.jdk.CollectionConverters._
-    val ks = lgdCache.keySet.asScala.toSeq
-    ks.foreach(lgdCache.remove)
-    val kb = bpeCache.keySet.asScala.toSeq
-    kb.foreach(bpeCache.remove)
-    ks.size + kb.size
   }
 
   /** checkpointSteps: checkpoint each step AS IT IS BUILT so the next

@@ -19,7 +19,7 @@ class VerifySpec extends AnyFunSuite {
     val analysisCrash: (SparkSession, String) => DataFrame =
       (s, d) => Tables.region(s, d).selectExpr("no_such_column + 1")
     val runtimeCrash: (SparkSession, String) => DataFrame =
-      (s, d) => {
+      (s, _) => {
         import s.implicits._
         Seq("boom").toDF("v").selectExpr(
           "assert_true(v != 'boom', 'deliberate') AS x")

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Seams, TestSpark}
 
-/** The durable signature seam: with `spark.graft.sigCacheDir` set, the
+/** The durable signature seam: with [[graft.Seams.CacheDirKey]] set, the
   * shingle→minhash stage is written to parquet ONCE and every later
   * session reads the artifact back instead of recomputing — the shape
   * that survives session restarts and executor loss at 100 TB, where
@@ -43,16 +43,16 @@ class SigCacheSpec extends AnyFunSuite {
 
     // "session 1": durable path populates the artifact
     val s1 = spark.newSession()
-    s1.conf.set(Dedup.SigCacheDirKey, cache.toString)
+    s1.conf.set(Seams.CacheDirKey, cache.toString)
     val got1 = Dedup.ngramJaccard(s1, dir).collect().toSeq
     assert(got1 === expected)
     val after1 = artifactFiles(cache)
     assert(after1.contains("_SUCCESS"), s"incomplete artifact: $after1")
 
-    // "session 2": a fresh session (cold sigCache entry) must REUSE the
+    // "session 2": a fresh session (cold sig memo entry) must REUSE the
     // artifact — byte-for-byte untouched — not recompute or rewrite it
     val s2 = spark.newSession()
-    s2.conf.set(Dedup.SigCacheDirKey, cache.toString)
+    s2.conf.set(Seams.CacheDirKey, cache.toString)
     val got2 = Dedup.ngramJaccard(s2, dir).collect().toSeq
     assert(got2 === expected)
     assert(artifactFiles(cache) === after1,
@@ -64,7 +64,7 @@ class SigCacheSpec extends AnyFunSuite {
     assert(Dedup.dupClusters(s2, dir).collect().toSeq ===
       Dedup.dupClusters(spark, dir).collect().toSeq)
 
-    Dedup.releaseCaches(s1)
-    Dedup.releaseCaches(s2)
+    Seams.release(s1)
+    Seams.release(s2)
   }
 }

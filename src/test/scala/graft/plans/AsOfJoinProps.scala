@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 

@@ -27,8 +27,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // round 2 over segs {¢ab ×2, ab ×1}: ¢a = 2, ab = 3 → merge (a,b)
     // n=3 — note ab's count SURVIVED because the greedy leftmost 'aa'
     // rewrite in 'aaab' leaves '...ab' intact.
-    val got = TextAnalysis.bpeTrainOn(spark,
-      docs("aaab aaab", "ab"), rounds = 2)
+    val got = TextAnalysis.bpeTrainOn(docs("aaab aaab", "ab"), rounds = 2)
     assert(got === Seq(
       (1, "aa", "a", "a", 4L),
       (2, "ab", "a", "b", 3L)))
@@ -41,7 +40,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // SIDES expand to 'aa','aa' — a 4-char symbol no round-0 ranking
     // could emit.
     val ph = (128).toChar.toString
-    val got = TextAnalysis.bpeTrainOn(spark, docs("aaaa aaaa aaaa"), 2)
+    val got = TextAnalysis.bpeTrainOn(docs("aaaa aaaa aaaa"), 2)
     assert(got === Seq(
       (1, "aa", "a", "a", 9L),
       (2, ph + ph, "aa", "aa", 3L)))
@@ -52,7 +51,7 @@ class BpeTrainSpec extends AnyFunSuite {
     // vocab: ba ×1, bc ×1 → pairs ba=1, bc=1 → tie → 'ba' wins (ASC).
     // After merging (b,a): segs {¢, bc}; round 2 merges (b,c); round 3
     // has no 2-symbol seg left → training returns 2 rows, not 3.
-    val got = TextAnalysis.bpeTrainOn(spark, docs("ba bc"), 3)
+    val got = TextAnalysis.bpeTrainOn(docs("ba bc"), 3)
     assert(got.map(m => (m._1, m._3, m._4, m._5)) === Seq(
       (1, "b", "a", 1L), (2, "b", "c", 1L)))
   }
