@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -94,8 +96,12 @@ object Ingest {
     * already queued — the reference's XADD replay window) are dropped by
     * the watermark-bounded lineage-id dedup BEFORE routing; in-batch
     * duplicates by the per-table key dedup; batch replays by the
-    * (queryId, batchId) commit log inside [[JdbcSink.appendExactlyOnce]].
-    * Dead letters append to parquet at-least-once — diagnostics, not
+    * (queryId, batchId) commit log inside [[JdbcSink.appendExactlyOnce]],
+    * one receipt per table (`<qid>#snapshots`, `<qid>#deltas`). Each
+    * table's share of a batch is one database transaction that writes
+    * its receipt and its rows together, from one task, so a crash
+    * leaves a table with all of a batch or none of it; a batch with no
+    * rows for a table still gets that table's receipt. Dead letters append to parquet at-least-once — diagnostics, not
     * facts, so a rare batch-replay duplicate there is acceptable and
     * documented. */
   def consumer(spark: SparkSession, cfg: Config): StreamingQuery = {
@@ -161,7 +167,7 @@ object Ingest {
           .find(_.contains("\"seg\""))
           .map(graft.streaming.QueueOffset.parse)
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Resolve the subscription: static `--tickers` wins; otherwise signed
     * discovery against `--api-base` (A1's live half) — a driver-side,

@@ -4,9 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** EXACTLY-ONCE parquet emission for foreachBatch sinks — the file-
-  * system twin of [[JdbcSink.appendExactlyOnce]]'s staging discipline,
+  * system twin of [[JdbcSink.appendExactlyOnce]]'s per-batch receipt,
   * writing the dd24 curation layout (`partitionBy(split, shard)`)
-  * instead of a JDBC table.
+  * instead of a JDBC table. A file system has no transaction to put
+  * the rows and the receipt in, so the batch is staged and promoted
+  * under deterministic names, and the marker is written last.
   *
   * Protocol per (queryId, batchId):
   *  1. commit marker exists → return false (the replayed-batch no-op:

@@ -1409,7 +1409,7 @@ object StreamedQueries {
     * (`partitionBy(split, shard)`, the same doc-hash split/shard
     * formulas) through [[ParquetEmit.emitExactlyOnce]]: staged write,
     * idempotent deterministic-name promote, commit-marker-last — the
-    * JdbcSink staging discipline on files.
+    * file-system form of JdbcSink's per-batch receipt.
     *
     * The gate IS the replay proof: the feed runs TWICE against the
     * same emission dir — the second pass (fresh checkpoint, identical

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Par, TestSpark}
 import graft.orderbook.{Fixtures, Normalize}
 
 /** The transactional upgrade of A14/A15: the reference's
@@ -17,8 +17,8 @@ import graft.orderbook.{Fixtures, Normalize}
   * crash lands between the insert and the XDEL; [[JdbcSink.appendExactlyOnce]]
   * makes the JDBC fact sink idempotent per (query_id, batch_id) so a
   * re-delivered micro-batch is a no-op — NO dropDuplicates anywhere in
-  * the path. Exercised against embedded Derby: same df.write.jdbc /
-  * driver-transaction code path Postgres would get.
+  * the path. Exercised against embedded Derby: the same single-task
+  * JDBC transaction (receipt first, then the rows) Postgres would get.
   */
 class JdbcExactlyOnceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.init()
@@ -34,12 +34,29 @@ class JdbcExactlyOnceSpec extends AnyFunSuite {
   private def facts() = Normalize.flattenDeltas(
     Normalize.parseDeltaEntries(Fixtures.deltaEntries(spark)))
 
-  private def rowCount(url: String, props: Properties, table: String): Long = {
+  private def longQuery(url: String, props: Properties, sql: String): Long = {
     val conn = DriverManager.getConnection(url, props)
     try {
-      val rs = conn.createStatement()
-        .executeQuery(s"SELECT COUNT(*) FROM $table")
+      val rs = conn.createStatement().executeQuery(sql)
       rs.next(); rs.getLong(1)
+    } finally conn.close()
+  }
+
+  private def rowCount(url: String, props: Properties, table: String): Long =
+    longQuery(url, props, s"SELECT COUNT(*) FROM $table")
+
+  private def receipts(url: String, props: Properties, qid: String,
+      batchId: Long): Long =
+    longQuery(url, props, s"""SELECT COUNT(*) FROM ${JdbcSink.commitLogTable}
+      | WHERE "query_id" = '$qid' AND "batch_id" = $batchId""".stripMargin)
+
+  private def tableNames(url: String, props: Properties): Seq[String] = {
+    val conn = DriverManager.getConnection(url, props)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
+      try Iterator.continually(rs).takeWhile(_.next())
+        .map(_.getString("TABLE_NAME")).toList
+      finally rs.close()
     } finally conn.close()
   }
 
@@ -58,38 +75,93 @@ class JdbcExactlyOnceSpec extends AnyFunSuite {
     assert(JdbcSink.appendExactlyOnce(df, url, "orderbook_deltas",
       JdbcSink.deltaColumnTypes, props, "q1", 1L))
     assert(rowCount(url, props, "orderbook_deltas") === 2 * n)
-    // stage is drained after every successful promotion
-    assert(rowCount(url, props, "orderbook_deltas_stage") === 0)
+    // rows go straight into the fact table: no staging table exists
+    val tables = tableNames(url, props)
+    assert(tables.contains("ORDERBOOK_DELTAS"))
+    assert(!tables.exists(_.endsWith("_STAGE")), tables)
   }
 
   test("junk from a crashed half-staged attempt never reaches the facts") {
     val (url, props) = derby()
     val df = facts()
     val n = df.count()
-    // batch 0 lands normally (also creates the tables)
-    JdbcSink.appendExactlyOnce(df, url, "orderbook_deltas",
-      JdbcSink.deltaColumnTypes, props, "q1", 0L)
-    // an attempt at batch 1 "crashed" mid-staging-load: its junk rows
-    // sit in the stage, no commit-log row, facts untouched
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      conn.createStatement().executeUpdate(
-        """INSERT INTO orderbook_deltas_stage ("timestamp", "ticker",
-          | "side", "price_dollars", "delta", "redis_stream_id",
-          | "query_id", "batch_id")
-          | VALUES (1, 'JUNK', 'yes', 0.5, 1, 'junk-1', 'q1', 1)""".stripMargin)
-    } finally conn.close()
-    // the retry of batch 1 must clear the junk, then land the batch once
+    // batch 1's last row overflows `ticker VARCHAR(50)`: the insert
+    // fails mid-batch, and with batchSize 1 the rows sent before it are
+    // already inside the transaction that fails
+    val bad = df.union(df.limit(1).withColumn("ticker", lit("X" * 60)))
+    intercept[Exception](JdbcSink.appendExactlyOnce(bad, url,
+      "orderbook_deltas", JdbcSink.deltaColumnTypes, props, "q1", 1L,
+      batchSize = 1))
+    // the failed attempt rolled back whole: no fact row, no receipt
+    assert(rowCount(url, props, "orderbook_deltas") === 0L)
+    assert(receipts(url, props, "q1", 1L) === 0L)
+    // the clean retry of batch 1 lands it exactly once
     assert(JdbcSink.appendExactlyOnce(df, url, "orderbook_deltas",
       JdbcSink.deltaColumnTypes, props, "q1", 1L))
-    assert(rowCount(url, props, "orderbook_deltas") === 2 * n)
-    assert(rowCount(url, props, "orderbook_deltas_stage") === 0)
-    val conn2 = DriverManager.getConnection(url, props)
-    try {
-      val rs = conn2.createStatement().executeQuery(
-        """SELECT COUNT(*) FROM orderbook_deltas WHERE "ticker" = 'JUNK'""")
-      rs.next(); assert(rs.getLong(1) === 0L)
-    } finally conn2.close()
+    assert(!JdbcSink.appendExactlyOnce(df, url, "orderbook_deltas",
+      JdbcSink.deltaColumnTypes, props, "q1", 1L))
+    assert(rowCount(url, props, "orderbook_deltas") === n)
+    assert(receipts(url, props, "q1", 1L) === 1L)
+  }
+
+  test("an empty batch commits its receipt alone; its replay is a no-op") {
+    val (url, props) = derby()
+    val df = facts()
+    // folded to an empty relation at planning time, and empty only once
+    // it runs: both must leave exactly one receipt and no row
+    val empties = Seq(df.where(lit(false)),
+      df.where(col("ticker") === "NO-SUCH-TICKER"))
+    empties.zipWithIndex.foreach { case (e, b) =>
+      assert(JdbcSink.appendExactlyOnce(e, url, "orderbook_deltas",
+        JdbcSink.deltaColumnTypes, props, "q1", b.toLong))
+      assert(!JdbcSink.appendExactlyOnce(e, url, "orderbook_deltas",
+        JdbcSink.deltaColumnTypes, props, "q1", b.toLong))
+      assert(receipts(url, props, "q1", b.toLong) === 1L)
+    }
+    assert(rowCount(url, props, "orderbook_deltas") === 0L)
+  }
+
+  test("NULL in every nullable fact column round-trips as SQL NULL") {
+    val (url, props) = derby()
+    val cols = facts().columns.toSeq
+    // row i is NULL in column i only
+    val withNulls = cols.indices.map { i =>
+      facts().limit(1).withColumn(cols(i), lit(null).cast(
+        facts().schema(cols(i)).dataType))
+    }.reduce(_ union _)
+    assert(JdbcSink.appendExactlyOnce(withNulls, url, "orderbook_deltas",
+      JdbcSink.deltaColumnTypes, props, "q1", 0L))
+    assert(rowCount(url, props, "orderbook_deltas") === cols.size.toLong)
+    cols.foreach { c =>
+      assert(longQuery(url, props, "SELECT COUNT(*) FROM orderbook_deltas " +
+        s"""WHERE "$c" IS NULL""") === 1L, c)
+    }
+  }
+
+  test("two sinks starting together on a fresh database both land") {
+    val df = facts()
+    val n = df.count()
+    val tables = Seq("orderbook_deltas", "orderbook_deltas_b")
+    // the CREATE race is timing-dependent: several fresh databases,
+    // two sinks released together on each, with their fact tables made
+    // beforehand so the shared commit log is the only table they race on
+    (1 to 4).foreach { _ =>
+      val (url, props) = derby()
+      tables.foreach(t => JdbcSink.append(df.limit(0), url, t,
+        JdbcSink.deltaColumnTypes, props))
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = tables.map { t =>
+        Par.async {
+          start.await()
+          JdbcSink.appendExactlyOnce(df, url, t, JdbcSink.deltaColumnTypes,
+            props, s"q-$t", 0L)
+        }
+      }
+      start.countDown()
+      // both raced to create the shared commit log; neither may fail
+      assert(results.map(Par.await(_)) === Seq(true, true))
+      tables.foreach(t => assert(rowCount(url, props, t) === n))
+    }
   }
 
   test("killed-and-restarted stream re-delivers a batch; facts stay " +
