@@ -304,7 +304,6 @@ object SkewBench {
       val nB = math.max(500000L, n / 2)
       val vDir = s"/tmp/graft-skew-binq-c-$nB"
       generateVecs(spark, vDir, nB)
-      graft.functions.GraftFunctions.register(spark)
       val vecs = spark.read.parquet(vDir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("e"))
@@ -380,7 +379,6 @@ object SkewBench {
     // a 20-minute brute pass it didn't ask for.
     val knnFull = fams.contains("knn")
     if (knnFull || want("knn20")) {
-      graft.functions.GraftFunctions.register(spark)
       // knn20: the 20k crossover point alone, preceded by a throwaway
       // warm pass — the family's first-ever query otherwise absorbs
       // session codegen/IO warmup into its min-of-2 (measured 18.4 s
@@ -446,7 +444,6 @@ object SkewBench {
     // family on an unfiltered run, and a default invocation must never
     // demand a 64g driver.
     if (fams.contains("knnbig") || fams.contains("knnbigt")) {
-      graft.functions.GraftFunctions.register(spark)
       // knnbig = sim08's nprobe=1 graph (the round-14 point);
       // knnbigt = sim30's trained + nprobe=2 config — the quality
       // upgrade exercised at the scale where round 14 found the
@@ -476,7 +473,6 @@ object SkewBench {
     // not a min-of-2 regression gate — the nprobe=16 candidate join
     // alone is ~8x the knnbigt arm's). Same 64 g-driver opt-in.
     for (np <- Seq(8, 16) if fams.contains(s"knnbig$np")) {
-      graft.functions.GraftFunctions.register(spark)
       val big = math.max(1000000L, n / 4)
       val bDir = s"/tmp/graft-skew-knn-$big"
       generateVecs(spark, bDir, big)
@@ -502,7 +498,6 @@ object SkewBench {
     // approx side is the FULL consumer-shaped graph build, so cell_sec
     // is the real per-corpus cost a consumer pays at each setting.
     if (fams.contains("knnship")) {
-      graft.functions.GraftFunctions.register(spark)
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
         "/root/testdata/sf0.1")
       val vecs = graft.Tables.embeddings(spark, sfDir)
@@ -560,7 +555,6 @@ object SkewBench {
     // BASELINE.md makes the deploy-time encoding dial two-column:
     // measure sim18 on YOUR corpus, read the arm that wins there.
     if (want("pqgeom")) {
-      graft.functions.GraftFunctions.register(spark)
       val sim = graft.similarity.Similarity
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
         "/root/testdata/sf0.1")
@@ -737,7 +731,6 @@ object SkewBench {
     // ASSIGNMENT shifts, which is exactly the drift a frozen
     // quantizer cannot see without this audit.
     if (want("drift")) {
-      graft.functions.GraftFunctions.register(spark)
       def vecExpr(seed: Int) =
         s"""transform(sequence(0, 63), i -> cast(
            |  (pmod(hash(cid, i, $seed), 2001) - 1000) / 1000.0

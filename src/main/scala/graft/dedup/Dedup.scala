@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType}
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Deduplication operators for an LLM training-data pipeline: exact
   * (hash-groupBy), n-gram Jaccard, MinHash+LSH banding, SimHash
@@ -55,8 +54,7 @@ object Dedup {
     * string-shingle ones; sorting once per doc lets every pairwise
     * intersection run as an allocation-free merge
     * (graft_sorted_intersect_count) instead of a per-pair hash set. */
-  private def withHashedShingles(s: SparkSession, df: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
+  private def withHashedShingles(df: DataFrame): DataFrame = {
     df.withColumn("hsh", call_function("graft_shingle_hashes", col("text")))
   }
 
@@ -239,7 +237,6 @@ object Dedup {
   /** SimHash bucketing: identical 30-bit signatures → dup bucket.
     * Single hash-shuffle on the signature (native SimHash expression). */
   def simhashBuckets(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     docsAug(s, d)
       .withColumn("sig", call_function("graft_simhash", split(col("text"), " ")))
       .groupBy(col("sig"))
@@ -294,7 +291,7 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
 
   private[graft] def minhashSig(s: SparkSession, d: String): DataFrame =
-    withHashedShingles(s, docsAug(s, d))
+    withHashedShingles(docsAug(s, d))
       .select(col("doc_id"), col("hsh"))
       .withColumn("sig", call_function("graft_minhash32", col("hsh")))
 
@@ -384,7 +381,6 @@ object Dedup {
     embedNearDupOn(s, d, embedNormed(s, d))
 
   private def embedNormed(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val v = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> cast(x as double))").as("e"))
     v.unionByName(v.where(col("vec_id") % 9 === 0)
@@ -772,7 +768,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // materialize the (small) report while the gram cache and the bloom
     // broadcast are alive, then release
-    try bloomDecontOn(s, evalGrams, trainGramsSeam(s, d, train))
+    try bloomDecontOn(evalGrams, trainGramsSeam(s, d, train))
       .localCheckpoint()
     finally evalGrams.unpersist()
   }
@@ -781,13 +777,12 @@ object Dedup {
   private[graft] def decontaminateBloomPlan(s: SparkSession, d: String)
       : DataFrame = {
     val (eval_, train) = decontSides(s, d)
-    bloomDecontOn(s, wordGrams(eval_).select(col("gram")).distinct(),
+    bloomDecontOn(wordGrams(eval_).select(col("gram")).distinct(),
       wordGrams(train))
   }
 
-  private def bloomDecontOn(s: SparkSession, evalGrams: DataFrame,
+  private def bloomDecontOn(evalGrams: DataFrame,
       trainGrams: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
     val n = evalGrams.count()
     // zero eval grams → zero hits, and the sketch aggregate over an
     // empty frame yields a NULL binary — skip the probabilistic stage
@@ -1135,7 +1130,7 @@ object Dedup {
         concat(col("text"), lit(" extra token")).as("text")))
     val all = eval_.withColumn("side", lit("e"))
       .unionByName(train.withColumn("side", lit("t")))
-    val sig = withHashedShingles(s, all)
+    val sig = withHashedShingles(all)
       .withColumn("sig", call_function("graft_minhash32", col("hsh")))
       .select(col("doc_id"), col("side"), col("hsh"), col("sig"))
     val bands = withBandKeys(sig.select(col("doc_id"), col("sig")))
@@ -1261,7 +1256,7 @@ object Dedup {
           concat(col("text"), lit(" extra token")).as("text")))
     val all = hist.withColumn("side", lit("h"))
       .unionByName(inc.withColumn("side", lit("i")))
-    val sig = withHashedShingles(s, all)
+    val sig = withHashedShingles(all)
       .withColumn("sig", call_function("graft_minhash32", col("hsh")))
       .select(col("doc_id"), col("side"), col("hsh"), col("sig"))
     val bands = withBandKeys(sig.select(col("doc_id"), col("sig")))
@@ -2269,7 +2264,7 @@ object Dedup {
       : (DataFrame, DataFrame) =
     graft.Seams.memo(s, d, "dd25-stores") {
       val sigStore = graft.Seams.durable(s, d, "dd25-sigstore") {
-        val sg = withHashedShingles(s, dd25Hist(s, d))
+        val sg = withHashedShingles(dd25Hist(s, d))
           .select(col("doc_id"), col("hsh"))
           .withColumn("sig", call_function("graft_minhash32", col("hsh")))
         val labels = connectedComponentsStar(verifiedPairsOn(sg)
@@ -2331,7 +2326,6 @@ object Dedup {
   private[graft] def incrementalCurationMergedFrom(s: SparkSession,
       sigStore: DataFrame, keepStore: DataFrame, inc: DataFrame,
       corpusDir: Option[String] = None): DataFrame = {
-    GraftFunctions.register(s)
     // increment attrs ∥ the band/verify/CC chain (guide §2.6): the
     // attrs pass (token stats + repetition over the INCREMENT only)
     // is not needed until the post-CC candidate union — build it on a
@@ -2350,7 +2344,7 @@ object Dedup {
     // keep the localCheckpoint "computed artifact" idiom; both
     // truncate the lineage this query's ~90 KB analyzed plan pays
     // Catalyst time for.
-    val incSigRaw = withHashedShingles(s, inc)
+    val incSigRaw = withHashedShingles(inc)
       .select(col("doc_id"), col("hsh"))
       .withColumn("sig", call_function("graft_minhash32", col("hsh")))
     val incSig = corpusDir match {
@@ -2424,7 +2418,7 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val merged = incrementalCurationMergedFrom(s, sigStore, keepStore, inc)
     val mapping = merged.select(col("node"), col("cluster_id").as("cl2"))
-    val incSig = withHashedShingles(s, inc)
+    val incSig = withHashedShingles(inc)
       .select(col("doc_id"), col("hsh"))
       .withColumn("sig", call_function("graft_minhash32", col("hsh")))
     val sig2 = sigStore
@@ -2488,12 +2482,8 @@ object Dedup {
       val keys = toWrite.map { case (sp, sh) => s"$sp/$sh" }.toSeq
       val sel = incrementalCurationSelected(s, d)
         .where(concat_ws("/", col("split"), col("shard")).isin(keys: _*))
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode",
-        "static")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try sel.write.mode("overwrite").partitionBy("split", "shard")
-        .parquet(out)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      sel.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("split", "shard").parquet(out)
     }
     // Emptied partitions go through the Hadoop FileSystem API — the
     // same abstraction the write path above uses — so the delete works

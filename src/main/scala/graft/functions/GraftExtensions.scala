@@ -3,13 +3,15 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Session extensions: the engine's native functions registered
-  * first-class (usable from any SQL text with no imperative
-  * `register()` call), plus the [[VecDotRewrite]] optimizer rule.
+  * first-class (usable from any SQL text, lambda body or
+  * `call_function`, in every session — `newSession()` ones included),
+  * plus the [[VecDotRewrite]] optimizer rule.
   * Wired via `spark.sql.extensions=graft.functions.GraftExtensions`
   * (GraftSession sets it). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -34,6 +36,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_vec_dot"), (e: Seq[Expression]) => VecDot(e(0), e(1))))
     ext.injectFunction((FunctionIdentifier("graft_cdc_chunks"),
       info("graft_cdc_chunks"), (e: Seq[Expression]) => CdcChunksGen(e.head)))
+    ext.injectFunction((FunctionIdentifier("graft_sign_pack"),
+      info("graft_sign_pack"), (e: Seq[Expression]) => SignPack(e.head)))
+    ext.injectFunction((FunctionIdentifier("graft_int_dot"),
+      info("graft_int_dot"), (e: Seq[Expression]) => IntVecDot(e(0), e(1))))
+    ext.injectFunction((FunctionIdentifier("graft_int_l2sq"),
+      info("graft_int_l2sq"), (e: Seq[Expression]) => IntVecL2Sq(e(0), e(1))))
+    ext.injectFunction((FunctionIdentifier("graft_cdc_cuts"),
+      info("graft_cdc_cuts"), (e: Seq[Expression]) => CdcCutsExpr(e.head)))
+    // aggregate: the Analyzer wraps a bare AggregateFunction from the
+    // registry in an AggregateExpression, so this composes with
+    // groupBy(...).agg(call_function("graft_topk", ...)) directly
+    ext.injectFunction((FunctionIdentifier("graft_topk"), info("graft_topk"),
+      (e: Seq[Expression]) => TopKStruct(e(0), e(1), e(2), e(3))))
+    // Spark's own runtime-filter sketch pair (registered internally as
+    // bloom_filter_agg / might_contain, reachable only by the optimizer)
+    // surfaced under graft names so queries can call them directly:
+    // a distributed TypedImperativeAggregate sketch build and a
+    // codegen'd probe expression — no Scala-UDF closure in the hot
+    // map-side filter (dd10's regime). Probe values are longs
+    // (mightContainLong), so callers hash with xxhash64 on both sides.
+    ext.injectFunction((FunctionIdentifier("graft_bloom_agg"),
+      info("graft_bloom_agg"),
+      (e: Seq[Expression]) => new BloomFilterAggregate(e(0), e(1), e(2))))
+    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
+      info("graft_might_contain"),
+      (e: Seq[Expression]) => BloomFilterMightContain(e(0), e(1))))
     ext.injectOptimizerRule(_ => VecDotRewrite)
     // whole-operator surface: the native as-of join's planner strategy
     // (logical AsOfJoinNode -> physical AsOfJoinExec)

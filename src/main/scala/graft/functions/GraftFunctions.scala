@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -533,56 +532,4 @@ case class CdcChunksGen(child: Expression)
   override protected def withNewChildInternal(newChild: Expression)
       : CdcChunksGen = copy(child = newChild)
   override def prettyName: String = "graft_cdc_chunks"
-}
-
-object GraftFunctions {
-  /** Idempotent per-session registration; queries call this so the
-    * expressions are usable from SQL text and lambda bodies alike. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_polyhash",
-      (e: Seq[Expression]) => PolyHash(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      (e: Seq[Expression]) => SimHash(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      (e: Seq[Expression]) => SortedIntersectCount(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash32",
-      (e: Seq[Expression]) => MinHashSig(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_positional_eq_count",
-      (e: Seq[Expression]) => PositionalEqCount(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      (e: Seq[Expression]) => ShingleHashes(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_vec_dot",
-      (e: Seq[Expression]) => VecDot(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sign_pack",
-      (e: Seq[Expression]) => SignPack(e.head), "built-in")
-    // aggregate: the Analyzer wraps a bare AggregateFunction from the
-    // registry in an AggregateExpression, so this composes with
-    // groupBy(...).agg(call_function("graft_topk", ...)) directly
-    reg.createOrReplaceTempFunction("graft_topk",
-      (e: Seq[Expression]) => TopKStruct(e(0), e(1), e(2), e(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_int_dot",
-      (e: Seq[Expression]) => IntVecDot(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_int_l2sq",
-      (e: Seq[Expression]) => IntVecL2Sq(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_chunks",
-      (e: Seq[Expression]) => CdcChunksGen(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_cuts",
-      (e: Seq[Expression]) => CdcCutsExpr(e.head), "built-in")
-    // Spark's own runtime-filter sketch pair (registered internally as
-    // bloom_filter_agg / might_contain, reachable only by the optimizer)
-    // surfaced under graft names so queries can call them directly:
-    // a distributed TypedImperativeAggregate sketch build and a
-    // codegen'd probe expression — no Scala-UDF closure in the hot
-    // map-side filter (dd10's regime). Probe values are longs
-    // (mightContainLong), so callers hash with xxhash64 on both sides.
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      (e: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(e(0), e(1), e(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      (e: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(e(0), e(1)), "built-in")
-  }
 }

@@ -470,7 +470,6 @@ object Multimodal {
     // declarative HOF spelling of the same windowed hash is the oracle
     // and costs ~18 s/query at sf0.1 because Catalyst runs lambda HOFs
     // interpreted per element (functions/GraftFunctions.scala CdcCuts)
-    graft.functions.GraftFunctions.register(blobs.sparkSession)
     blobs
       .select(col("media_id"), hex(col("payload")).as("hx"),
         call_function("graft_cdc_cuts", col("payload")).as("cuts"))
@@ -548,7 +547,6 @@ object Multimodal {
     * and one 3-row join. Payload bytes still never shuffle — digests
     * and lengths do. */
   def chunkSavings(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def kindOf(id: org.apache.spark.sql.Column) =
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (id % 3 + 1).cast(IntegerType))

@@ -18,52 +18,38 @@ import graft.Tables
   * sketches into megabytes — exactly dd10's argument, now produced by
   * the engine's optimizer rule instead of by hand.
   *
-  * The conf dance: injection is gated on thresholds tuned for clusters
-  * (probe scan ≥ 10 GB), so the query lowers them to local-data scale,
-  * FREEZES its physical plan while they apply (`executedPlan` is a
-  * lazy val — forcing it pins the injected filter into the plan this
-  * DataFrame executes), then restores every key so the session's other
-  * queries plan under stock confs. PlanSpec pins `might_contain` in
-  * the frozen plan. Broadcast stays disabled for THIS plan only — the
-  * whole point is the non-broadcastable join.
+  * Conf isolation: injection is gated on thresholds tuned for clusters
+  * (probe scan ≥ 10 GB), so the query runs on its own `newSession()`
+  * with them lowered to local-data scale and broadcast disabled — the
+  * whole point is the non-broadcastable join. Every action on the
+  * returned frame plans under these confs; the caller's session keeps
+  * its stock ones. PlanSpec pins `might_contain` in the plan.
   */
 object RuntimeFilter {
 
   private val dec = DecimalType(18, 2)
 
   def runtimeFiltered(s: SparkSession, d: String): DataFrame = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    s2.conf.set(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+      "0")
+    s2.conf.set(
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
-    try {
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0")
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "100MB")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val o = Tables.orders(s, d)
-        .where(col("o_orderpriority") === "1-URGENT" &&
-               col("o_orderstatus") === "F")
-        .select(col("o_orderkey"))
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_linestatus"), col("l_quantity"))
-      val df = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast(dec)).cast(DoubleType).as("qty"))
-        .orderBy(col("l_linestatus"))
-      df.queryExecution.executedPlan // freeze the injected-filter plan
-      df
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+      "100MB")
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val o = Tables.orders(s2, d)
+      .where(col("o_orderpriority") === "1-URGENT" &&
+             col("o_orderstatus") === "F")
+      .select(col("o_orderkey"))
+    val li = Tables.lineitem(s2, d)
+      .select(col("l_orderkey"), col("l_linestatus"), col("l_quantity"))
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("l_linestatus"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("l_quantity").cast(dec)).cast(DoubleType).as("qty"))
+      .orderBy(col("l_linestatus"))
   }
 
   val runtimeFilteredSql: String =

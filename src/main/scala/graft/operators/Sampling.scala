@@ -161,7 +161,6 @@ object Sampling {
     * oracle's integer ordering bit-for-bit. The oracle spells the
     * INDEPENDENT window-ranked formulation. */
   def groupPrioritySample(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val mulRed = 2654435761L % HashMod
     val k = GroupK

@@ -26,7 +26,6 @@ object Similarity {
     * left-folds so Spark and DuckDB produce bit-identical doubles
     * (graft_vec_dot is exactly that fold, natively). */
   private def normed(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))
@@ -701,7 +700,6 @@ object Similarity {
     * identical pipelines via [[knnGraph]] / [[knnGraphMulti]]). */
   private[graft] def knnGraphOn(s: SparkSession, vecs: DataFrame,
       k: Int = 2, nprobe: Int = 1, trainRounds: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val n = vecs
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))
@@ -1283,9 +1281,6 @@ object Similarity {
     * fold-exact in the oracle), so recall on true dups is structural,
     * not probabilistic. */
   def semDedup(s: SparkSession, d: String): DataFrame = {
-    // augmented corpus bypasses normed(), so register explicitly —
-    // probeCells' graft_topk must resolve when sim09 runs first
-    graft.functions.GraftFunctions.register(s)
     val v = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> cast(x as double))").as("e"))
     val n = v.unionByName(v.where(col("vec_id") % 9 === 0)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
@@ -64,8 +64,7 @@ object StreamNearDup {
     * verdict row per (doc, band). Band keys namespace by band index
     * (bkey < 10⁹+7, so `band · (10⁹+7) + bkey` keeps bands disjoint in
     * one BIGINT). */
-  def admit(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def admit(docs: DataFrame): DataFrame = {
     implicit val bandEnc = Encoders.product[BandRow]
     implicit val verdictEnc = Encoders.product[BandVerdict]
     implicit val longEnc = Encoders.scalaLong
@@ -119,14 +118,13 @@ object StreamNearDup {
   /** [[admit]] with event-time TTL on the band-claim state. `docs`
     * must carry an event-time column `ts`; `delay` is the watermark
     * delay, `ttlMs` the claim's time-to-live past its last arrival. */
-  def admitTtl(s: SparkSession, docs: DataFrame, delay: String,
+  def admitTtl(docs: DataFrame, delay: String,
       ttlMs: Long): DataFrame = {
     // A non-positive TTL would put the claim's deadline at/before the
     // group's own max event time, and setTimeoutTimestamp throws when
     // the deadline doesn't exceed the watermark — failing the whole
     // query at runtime. Reject it at plan-build time instead.
     require(ttlMs > 0, s"ttlMs must be positive (got $ttlMs)")
-    graft.functions.GraftFunctions.register(s)
     implicit val bandEnc = Encoders.product[BandRowT]
     implicit val verdictEnc = Encoders.product[BandVerdict]
     implicit val longEnc = Encoders.scalaLong

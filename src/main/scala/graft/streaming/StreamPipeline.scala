@@ -116,24 +116,7 @@ object StreamPipeline {
           col("msg.price_dollars").cast(Schemas.price).as("price_dollars"),
           col("msg.delta").as("delta")))
 
-  /** A14/A15 sink: checkpointed micro-batch append with replay-dedup
-    * inside each batch. Cross-batch duplicates are impossible for the
-    * file source (exactly-once offsets); the in-batch dedup guards the
-    * at-least-once buffer semantics the reference has. */
-  def writeFacts(facts: DataFrame, outPath: String, checkpoint: String,
-      dedupKeys: Seq[String], trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    facts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Normalize.dedupReplays(batch, dedupKeys)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
-
-  /** A15 across micro-batches: the in-batch dedup in [[writeFacts]]
+  /** A15 across micro-batches: the in-batch dedup in [[runUnified]]
     * covers the file source's exactly-once offsets, but an
     * at-least-once transport (socket reconnect, Redis re-delivery)
     * can resend a message in a LATER micro-batch. This keys streaming
@@ -286,26 +269,14 @@ object StreamPipeline {
   def debugCsvSink(df: DataFrame, path: String): Unit =
     df.write.mode("append").option("header", "true").csv(path)
 
-  /** __main__ equivalent (SURVEY.md §3.1): both branches as concurrent
-    * StreamingQuery instances on one session; returns them for
-    * awaitTermination / test control. */
-  def run(spark: SparkSession, inDir: String, outDir: String)
-      : Seq[StreamingQuery] = {
-    val msgs = readMessages(spark, inDir)
-    Seq(
-      writeFacts(routeSnapshots(msgs), s"$outDir/orderbook_snapshots",
-        s"$outDir/_ckpt_snapshots",
-        Seq("redis_stream_id", "side", "price_dollars")),
-      writeFacts(routeDeltas(msgs), s"$outDir/orderbook_deltas",
-        s"$outDir/_ckpt_deltas",
-        Seq("redis_stream_id")))
-  }
-
-  /** Single-pass variant: ONE streaming query parses each micro-batch
-    * once, persists it, and routes to both sinks inside `foreachBatch`.
-    * Halves the scan+parse work of [[run]] at the cost of coupling the
-    * two sinks' progress (one checkpoint, shared failure domain) —
-    * the right trade for throughput-bound ingest. */
+  /** __main__ equivalent (SURVEY.md §3.1) and the A14/A15 sink: ONE
+    * checkpointed streaming query parses each micro-batch once,
+    * persists it, and appends both fact tables inside `foreachBatch`
+    * with replay-dedup inside each batch. Cross-batch duplicates are
+    * impossible for the file source (exactly-once offsets); the
+    * in-batch dedup guards the at-least-once buffer semantics the
+    * reference has. The two sinks share one checkpoint and failure
+    * domain — the right trade for throughput-bound ingest. */
   def runUnified(spark: SparkSession, inDir: String, outDir: String)
       : StreamingQuery =
     runUnifiedFrom(readMessages(spark, inDir), outDir)

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, Row,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.orderbook.Derive
 
@@ -32,26 +33,29 @@ object StreamedQueries {
 
   private val qid = new AtomicInteger(0)
 
+  /** session_window / window-agg / (flat)mapGroupsWithState state is
+    * fine on the in-memory HDFS-backed provider; only
+    * transformWithState requires RocksDB. Measured perf-neutral at
+    * fixture scale (the micro-batch plan/commit lifecycle dominates,
+    * not store opens). */
   private val HdfsProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Config key: OVERRIDE the state-store provider the replay
-    * harnesses pin (r15 verdict #4 — the RocksDB equality arm).
-    * Normally unset: [[replay]] pins RocksDB (transformWithState
-    * requires it), replayClosed/replayOrdered pin the in-memory
-    * HDFS-backed provider. RocksDbStateSpec sets this to the RocksDB
-    * provider and re-runs the whole st family against the default
-    * outputs — at 100 TB state scale RocksDB IS the production
-    * provider, and session_window / windowed-agg /
+  /** Config key, read from the caller's session: OVERRIDE the
+    * state-store provider every [[replay]] stream runs with (r15
+    * verdict #4 — the RocksDB equality arm). Normally unset: each
+    * replay names its own provider — RocksDB for the
+    * transformWithState folds (which require it) and st10/st11, the
+    * in-memory HDFS-backed provider for the rest. RocksDbStateSpec
+    * sets this to the RocksDB provider and re-runs the whole st family
+    * against the default outputs — at 100 TB state scale RocksDB IS
+    * the production provider, and session_window / windowed-agg /
     * (flat)mapGroupsWithState are exactly where provider semantics
     * could diverge; the spec makes any divergence a cheap red test
     * instead of a cluster incident. */
   val ProviderOverrideKey = "spark.graft.stateStoreProvider"
-
-  private def effProvider(s: SparkSession, dflt: String): String =
-    s.conf.getOption(ProviderOverrideKey).getOrElse(dflt)
 
   /** Recursive delete for the replay input/checkpoint dirs —
     * `deleteOnExit` cannot remove non-empty directories, so without
@@ -68,7 +72,7 @@ object StreamedQueries {
     * mtime (`base + i` minutes — the file source orders batches by
     * mtime). A degenerate (near-empty) corpus can leave a chunk with
     * no part file at all — skip it; the remaining chunks still replay
-    * in order. Shared by [[replayOrdered]]/[[replayOrderedEmit]]. */
+    * in order. The [[Ordered]] staging's writer. */
   private def stageChunkFile(in: java.nio.file.Path, base: Long,
       rows: DataFrame, i: Int): Unit = {
     val stage = Files.createTempDirectory("graft-replay-stage")
@@ -110,7 +114,7 @@ object StreamedQueries {
     * spelling. ChunkManifestSpec pins the membership equality against
     * ntile per caller shape. */
   private[streaming] def chunkByRank(s: SparkSession, msgs: DataFrame,
-      order: org.apache.spark.sql.Column, chunks: Int = 3)
+      order: Column, chunks: Int = 3)
       : (DataFrame, DataFrame) = {
     import s.implicits._
     // the range sampler executes the feed subtree once before the
@@ -138,7 +142,7 @@ object StreamedQueries {
     val rank = col("__off") +
       col("__mid").bitwiseAND(lit((1L << 33) - 1))
     val chunkCol = (0 until chunks - 1)
-      .foldRight(lit(chunks): org.apache.spark.sql.Column) { (i, e) =>
+      .foldRight(lit(chunks): Column) { (i, e) =>
         when(rank < bounds(i), lit(i + 1)).otherwise(e)
       }
     val chunked = sorted
@@ -149,43 +153,120 @@ object StreamedQueries {
     (chunked, sorted)
   }
 
-  /** Replay `rows` through `topology` in ≥3 micro-batches and return
-    * the memory-sink table of all Update-mode emissions. */
-  private def replay(s: SparkSession, rows: DataFrame)(
-      topology: DataFrame => DataFrame): DataFrame = {
-    // transformWithState requires the RocksDB state store; scoped to
-    // streaming state only, so setting it session-wide is inert for
-    // every batch query in the registry
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      effProvider(s, RocksProvider))
+  /** How [[replay]] stages the feed as parquet files; the file source
+    * reads them one per micro-batch, oldest mtime first. */
+  private sealed trait Staging
+
+  /** `chunks` part files of a `repartition`: rows scatter, so only
+    * order-insensitive folds use it. An optional `flush` file gets the
+    * newest mtime, so it is the LAST batch: its far-future event time
+    * advances the watermark past every real window, and each one
+    * closes exactly once. The callers' corpus-spanning watermark makes
+    * the arbitrary chunk order a non-event. */
+  private final case class Scattered(chunks: Int = 3,
+      flush: Option[DataFrame] = None) extends Staging
+
+  /** ORDER-PRESERVING staging for order-sensitive state machines
+    * (st06's book: a stale snapshot arriving after newer deltas would
+    * wrongly reset the level map — the production feed is seq-ordered
+    * per connection and A3's validator fail-stops on violations, so an
+    * ordered replay IS the contract under test, not a simplification).
+    * 3 files by rank over `order` (per key, every row of chunk i
+    * precedes chunk i+1) at strictly increasing mtimes, ranked by
+    * [[chunkByRank]]'s parallel range sort, never a single-partition
+    * window. */
+  private final case class Ordered(order: Column) extends Staging
+
+  /** Where [[replay]] sends the topology's output. */
+  private sealed trait Sink
+
+  /** The memory sink: every emission, returned as a table. */
+  private case object MemoryTable extends Sink
+
+  /** A `foreachBatch` writer, for sinks whose whole point is their side
+    * effect (st20's exactly-once parquet emitter). `runs` > 1
+    * re-streams the SAME staged files with a fresh checkpoint per run:
+    * a full redelivery, every batch re-arriving with the same id and
+    * content — the at-least-once duplication an idempotent sink must
+    * absorb. The feed is staged once, so the files are identical by
+    * construction. */
+  private final case class Writer(write: (DataFrame, Long) => Unit,
+      runs: Int) extends Sink
+
+  /** State-store partitions = shuffle partitions at query start, one
+    * store instance each per micro-batch. Replay state is
+    * cells/tickers-sized, so 8 keeps the fold parallel at a quarter of
+    * a 32-wide session's store lifecycles. The stream-stream joins
+    * (st08/st09) open four stores per partition per batch; there this
+    * took the gates 19-20 s → 15-16 s at sf0.1, and 4 partitions ran
+    * slower (23-25 s) by starving the join of parallelism (round 12). */
+  private val StoreParts = 8
+
+  /** The one replay harness: stage `msgs` per `staging`, then run
+    * `topology` over a file stream of the staged files (one file per
+    * micro-batch, `AvailableNow`) into `sink`, so state folds across
+    * real batch boundaries — the thing the st gates put under the
+    * oracle. Returns the memory table bound to the CALLER's session
+    * (callers post-process it with `s` frames under `s`'s conf), or an
+    * empty frame for a [[Writer]].
+    *
+    * Staging runs on `s`; the stream runs on a scoped `s.newSession()`
+    * that carries the two stream confs: the state-store `provider`
+    * (unless [[ProviderOverrideKey]] is set on `s`) and [[StoreParts]]
+    * shuffle partitions. `s`'s conf never changes, so replays can
+    * overlap under [[graft.Par]]. The topology gets the stream frame
+    * and keeps using `s` for implicits and seams. */
+  private def replay(s: SparkSession, msgs: DataFrame, staging: Staging,
+      provider: String = HdfsProvider, outputMode: String = "update",
+      sink: Sink = MemoryTable)(topology: DataFrame => DataFrame)
+      : DataFrame = {
+    val rs = s.newSession()
+    rs.conf.set("spark.sql.streaming.stateStore.providerClass",
+      s.conf.getOption(ProviderOverrideKey).getOrElse(provider))
+    rs.conf.set("spark.sql.shuffle.partitions", StoreParts.toString)
     val in = Files.createTempDirectory("graft-replay-in")
     val ckpt = Files.createTempDirectory("graft-replay-ckpt")
-    // ≥3 part files → with maxFilesPerTrigger=1, ≥3 micro-batches:
-    // the state fold crosses real batch boundaries, which is the
-    // thing this entry exists to put under the oracle
-    rows.repartition(3).write.mode("overwrite").parquet(in.toString)
-    val name = s"graft_replay_${qid.incrementAndGet()}"
-    val stream = s.readStream.schema(rows.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in.toString)
-    // state-store partitions = shuffle partitions AT QUERY START, one
-    // RocksDB instance each per micro-batch: at the session's 32 that
-    // is ~100 store opens for a bounded replay whose state is
-    // cells/tickers-sized. 8 keeps the fold parallel and cuts the
-    // fixed store cost ~4x; restored before the caller's own plan runs
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    def run(i: Int)(to: DataStreamWriter[Row] => DataStreamWriter[Row])
+        : Unit =
+      to(topology(rs.readStream.schema(msgs.schema)
+          .option("maxFilesPerTrigger", 1).parquet(in.toString))
+        .writeStream.outputMode(outputMode)
+        .option("checkpointLocation", ckpt.resolve(s"run$i").toString)
+        .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
     try {
-      val q = topology(stream).writeStream
-        .format("memory").queryName(name).outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      rmTree(in); rmTree(ckpt)
-    }
-    s.table(name)
+      stage(s, msgs, staging, in)
+      sink match {
+        case MemoryTable =>
+          val name = s"graft_replay_${qid.incrementAndGet()}"
+          run(1)(_.format("memory").queryName(name))
+          // the memory sink registers its view in the stream's session
+          GraftPlanBridge.rebind(rs.table(name), s)
+        case Writer(write, runs) =>
+          (1 to runs).foreach(i => run(i)(_.foreachBatch(write)))
+          s.emptyDataFrame
+      }
+    } finally { rmTree(in); rmTree(ckpt) }
+  }
+
+  private def stage(s: SparkSession, msgs: DataFrame, staging: Staging,
+      in: Path): Unit = staging match {
+    case Scattered(chunks, flush) =>
+      msgs.repartition(chunks).write.mode("overwrite").parquet(in.toString)
+      flush.foreach { f =>
+        val old = System.currentTimeMillis() - 120000
+        Files.list(in).forEach(p => { p.toFile.setLastModified(old); () })
+        f.coalesce(1).write.mode("append").parquet(in.toString)
+      }
+    case Ordered(order) =>
+      val base = System.currentTimeMillis() - 600000
+      val (chunked, cached) = chunkByRank(s, msgs, order)
+      try {
+        (1 to 3).foreach { i =>
+          stageChunkFile(in, base,
+            chunked.where(col("__chunk") === i).drop("__chunk"), i)
+        }
+      } finally cached.unpersist(blocking = false)
   }
 
   // ----------------------------------------------------------------- st01
@@ -200,7 +281,6 @@ object StreamedQueries {
     * documented at [[StreamIvf.assign]]/[[StreamIvf.micros6]]. */
   def streamIvf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // the sim10 `normed` frame, verbatim (Similarity.scala:28-38)
     val n = graft.Tables.embeddings(s, d)
       .select(col("vec_id"),
@@ -222,8 +302,8 @@ object StreamedQueries {
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
         .sortBy(_._1))
-    val emissions = replay(s, n.select(col("vec_id"), col("e"), col("nrm"))) {
-      stream =>
+    val emissions = replay(s, n.select(col("vec_id"), col("e"), col("nrm")),
+        Scattered(), RocksProvider) { stream =>
         StreamIvf.runOn(s,
           stream.as[(Long, Array[Double], Double)].map { case (_, e, nrm) =>
             StreamIvf.CellVec(StreamIvf.assign(e, nrm, cents.value),
@@ -268,7 +348,7 @@ object StreamedQueries {
   def streamKmv(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val deltas = Derive.deltas(s, d).select(col("ticker"), col("price"))
-    val emissions = replay(s, deltas) { stream =>
+    val emissions = replay(s, deltas, Scattered(), RocksProvider) { stream =>
       StreamDistinct.runOn(s,
         stream.select(col("ticker"),
           ((col("price").cast("long") * 2654435761L + 678L)
@@ -303,6 +383,21 @@ object StreamedQueries {
        |FROM sk ORDER BY ticker""".stripMargin
 
   // ----------------------------------------------------------------- st03
+
+  private val WmDays = 36500L
+
+  /** Max event ts of the delta feed; 0 for an EMPTY (degenerate)
+    * corpus — the flush still runs, it just closes nothing. */
+  private def corpusMaxTs(s: SparkSession, d: String): Long = {
+    val r = Derive.deltas(s, d).agg(max(col("ts_ms"))).head
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  private def flushTsFor(s: SparkSession, d: String,
+      slackMs: Long): Long =
+    corpusMaxTs(s, d) +
+      slackMs + WmDays * 24 * 3600 * 1000 + 3600 * 1000
+
   /** st03 — the PRODUCTION streaming sessionizer
     * ([[StreamPipeline.messageSessions]]: `session_window` + watermark
     * over the wire-message frame) under the driver's oracle: the delta
@@ -325,197 +420,6 @@ object StreamedQueries {
     * diff ≥ gap (window ends are exclusive), so the oracle spells
     * `>=` — q16's batch convention is strictly-greater, which would
     * diverge on an exact-boundary event. */
-  /** Shared APPEND-mode replay for the watermarked window topologies:
-    * replay `msgs` in `chunks`+1 micro-batches (chunks data files +
-    * the flush, default 4 total; st08/st09 pass chunks=2 → 3) with
-    * `flushMsg` scheduled LAST (newest mtime — the file source orders
-    * by it), so the final batch's watermark closes every real window
-    * exactly once. The corpus-spanning watermark the callers pass
-    * makes the arbitrary chunk order a non-event. */
-  private def replayClosed(s: SparkSession, msgs: DataFrame,
-      flushMsg: DataFrame, chunks: Int = 3, storeParts: Int = 8)(
-      topology: DataFrame => DataFrame): DataFrame = {
-    // session_window / window-agg / (flat)mapGroupsWithState state is
-    // fine on the in-memory HDFS-backed provider — only
-    // transformWithState (st01/st02's replay) requires RocksDB. Set
-    // explicitly (not inherited): the provider conf is session-sticky,
-    // so whichever replay ran first would otherwise pick the provider
-    // for all of them. Measured perf-neutral at fixture scale (the
-    // micro-batch plan/commit lifecycle dominates, not store opens);
-    // the point is determinism, not speed.
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      effProvider(s, HdfsProvider))
-    val in = Files.createTempDirectory("graft-replayc-in")
-    val ckpt = Files.createTempDirectory("graft-replayc-ckpt")
-    // same state-store-partition scoping as `replay`/`replayOrdered`:
-    // the stream-stream joins (st08/st09) open FOUR stores per
-    // partition per micro-batch, so the session's 32 partitions cost
-    // ~512 store lifecycles per replay where 8 cost ~128. That
-    // scoping took the interval-join gates 19-20 s → ~15-16 s at
-    // sf0.1 — NOT the single digits first claimed: measured round 12,
-    // store lifecycles were no longer the bottleneck (4 partitions ×
-    // fewer chunks made it SLOWER — 23-25 s — by starving the join of
-    // parallelism). The real floor was the probe scan over
-    // corpus-sized same-ticker state, fixed where it belongs: the
-    // time-bucketed join key in StreamJoins.side (15-16 s → 5-6 s at
-    // sf0.1, measured min-of-2). chunks=2 for st08/st09 trims the
-    // remaining batch count; cross-batch pairing is still exercised —
-    // rows scatter over 2 unordered chunks and the flush closes the
-    // windows.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", storeParts.toString)
-    try {
-      msgs.repartition(chunks).write.mode("overwrite").parquet(in.toString)
-      val old = System.currentTimeMillis() - 120000
-      Files.list(in).forEach(p => { p.toFile.setLastModified(old); () })
-      flushMsg.coalesce(1).write.mode("append").parquet(in.toString)
-      val name = s"graft_replayc_${qid.incrementAndGet()}"
-      val q = topology(
-          s.readStream.schema(msgs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(in.toString))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      rmTree(in); rmTree(ckpt)
-    }
-  }
-
-  /** ORDER-PRESERVING replay for order-sensitive state machines
-    * (st06's book: a stale snapshot arriving after newer deltas would
-    * wrongly reset the level map — the production feed is seq-ordered
-    * per connection and A3's validator fail-stops on violations, so an
-    * ordered replay IS the contract under test, not a simplification).
-    * Chunks `msgs` into 3 files by rank over `order` (per key, every
-    * row of chunk i precedes chunk i+1) and schedules them as 3
-    * micro-batches via strictly increasing mtimes — the state fold
-    * still crosses real batch boundaries. The rank pass is replay
-    * harness cost, not operator cost, and runs as a parallel
-    * range-partitioned sort ([[chunkByRank]]), never a
-    * single-partition window. */
-  private def replayOrdered(s: SparkSession, msgs: DataFrame,
-      order: org.apache.spark.sql.Column,
-      flushMsg: Option[DataFrame] = None)(
-      topology: DataFrame => DataFrame,
-      provider: String = HdfsProvider,
-      outputMode: String = "append"): DataFrame = {
-    // same provider note as replayClosed — except st12, whose
-    // transformWithState topology passes the RocksDB provider in
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      effProvider(s, provider))
-    val in = Files.createTempDirectory("graft-replayo-in")
-    val ckpt = Files.createTempDirectory("graft-replayo-ckpt")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val base = System.currentTimeMillis() - 600000
-      // range-partitioned rank chunking ([[chunkByRank]]): same chunk
-      // membership, same in-file row order, same mtime schedule as the
-      // previous ntile window — without its single-partition sort
-      val (chunked, cached) = chunkByRank(s, msgs, order)
-      try {
-        (1 to 3).foreach { i =>
-          stageChunkFile(in, base,
-            chunked.where(col("__chunk") === i).drop("__chunk"), i)
-        }
-      } finally cached.unpersist(blocking = false)
-      // optional flush chunk, scheduled strictly last: event times past
-      // the corpus advance every leg's watermark so eviction-driven
-      // final emissions (outer-join negatives) fire before termination
-      flushMsg.foreach(f => stageChunkFile(in, base, f, 4))
-      val name = s"graft_replayo_${qid.incrementAndGet()}"
-      val q = topology(
-          s.readStream.schema(msgs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(in.toString))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      rmTree(in); rmTree(ckpt)
-    }
-  }
-
-  /** [[replayOrdered]]'s staging/trigger contract, but the topology's
-    * Update-mode output drives a `foreachBatch` WRITER instead of the
-    * memory sink — the harness for sinks whose whole point is their
-    * side effect (st20's exactly-once parquet emitter). Chunking is
-    * deterministic (rank over the caller's order, fixed mtimes), so
-    * re-running the SAME feed against the same emission dir — with a
-    * fresh checkpoint — is a full redelivery: every batch arrives
-    * again with the same id and content, which is exactly the
-    * at-least-once duplication an idempotent sink must absorb. */
-  /** `runs` > 1 re-streams the SAME staged chunk files with a fresh
-    * checkpoint per run — a full redelivery (every batch re-arrives
-    * with the same id and content). The feed is staged ONCE: the
-    * previous spelling re-ran the whole staging (rank pass + chunk
-    * writes) per run and relied on the chunking's determinism to
-    * produce byte-identical files; reusing the files IS that
-    * guarantee, for free. */
-  private def replayOrderedEmit(s: SparkSession, msgs: DataFrame,
-      order: org.apache.spark.sql.Column, runs: Int)(
-      topology: DataFrame => DataFrame,
-      writer: (DataFrame, Long) => Unit): Unit = {
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      effProvider(s, HdfsProvider))
-    val in = Files.createTempDirectory("graft-replaye-in")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val base = System.currentTimeMillis() - 600000
-      // same range-partitioned rank staging as replayOrdered (see
-      // [[chunkByRank]]): identical chunks, no single-partition sort
-      val (chunked, cached) = chunkByRank(s, msgs, order)
-      try {
-        (1 to 3).foreach { i =>
-          stageChunkFile(in, base,
-            chunked.where(col("__chunk") === i).drop("__chunk"), i)
-        }
-      } finally cached.unpersist(blocking = false)
-      (1 to runs).foreach { _ =>
-        val ckpt = Files.createTempDirectory("graft-replaye-ckpt")
-        try {
-          val q = topology(
-              s.readStream.schema(msgs.schema)
-                .option("maxFilesPerTrigger", 1).parquet(in.toString))
-            .writeStream
-            .foreachBatch(writer)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally rmTree(ckpt)
-      }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      rmTree(in)
-    }
-  }
-
-  private val WmDays = 36500L
-
-  /** Max event ts of the delta feed; 0 for an EMPTY (degenerate)
-    * corpus — the flush still runs, it just closes nothing. */
-  private def corpusMaxTs(s: SparkSession, d: String): Long = {
-    val r = Derive.deltas(s, d).agg(max(col("ts_ms"))).head
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  private def flushTsFor(s: SparkSession, d: String,
-      slackMs: Long): Long =
-    corpusMaxTs(s, d) +
-      slackMs + WmDays * 24 * 3600 * 1000 + 3600 * 1000
-
   def streamSessions(s: SparkSession, d: String): DataFrame = {
     val gapMs = 30L * 60 * 1000
     val msgs = Derive.deltas(s, d)
@@ -525,7 +429,7 @@ object StreamedQueries {
     val flush = s.range(1).select(lit("orderbook_delta").as("type"),
       struct(lit("ZFLUSH").as("market_ticker"),
         lit(flushTsFor(s, d, gapMs)).as("ts")).as("msg"))
-    replayClosed(s, msgs, flush)(
+    replay(s, msgs, Scattered(flush = Some(flush)), outputMode = "append")(
         StreamPipeline.messageSessions(_, gap = "30 minutes",
           watermark = s"$WmDays days"))
       .where(col("ticker") =!= "ZFLUSH") // its session never closes
@@ -571,7 +475,7 @@ object StreamedQueries {
       struct(lit("ZFLUSH").as("market_ticker"),
         lit(flushTsFor(s, d, 60L * 1000)).as("ts"),
         lit(1).as("price")).as("msg"))
-    replayClosed(s, msgs, flush)(
+    replay(s, msgs, Scattered(flush = Some(flush)), outputMode = "append")(
         StreamPipeline.candles(_, "1 minute", s"$WmDays days"))
       .where(col("ticker") =!= "ZFLUSH") // its candle never closes
       .select(col("ticker"), col("bucket_start"), col("open"),
@@ -610,7 +514,7 @@ object StreamedQueries {
       lit(1L).as("seq"),
       struct(lit("ZFLUSH").as("market_ticker"), lit("yes").as("side"),
         lit(flushTsFor(s, d, 0L)).as("ts"), lit(1).as("price")).as("msg"))
-    replayClosed(s, msgs, flush)(
+    replay(s, msgs, Scattered(flush = Some(flush)), outputMode = "append")(
         AsOfStream.enrich(s, _, watermark = s"$WmDays days").toDF())
       .select(col("ticker"), col("trade_seq"), col("trade_ts"),
         col("trade_price"), col("quote_seq"), col("quote_ts"),
@@ -650,8 +554,9 @@ object StreamedQueries {
     * ORDER-SENSITIVE (a stale snapshot arriving after newer deltas
     * would wrongly reset), and the production contract is a seq-ordered
     * feed per connection (A3's validator fail-stops on violations) —
-    * so [[replayOrdered]] chunks the corpus BY the application order
-    * (mtime-ordered files, one per chunk) instead of scattering rows.
+    * its [[replay]] uses [[Ordered]] staging, chunking the corpus BY
+    * the application order (mtime-ordered files, one per chunk)
+    * instead of scattering rows.
     * Messages interleave real snapshots (rebuilt as wire-shaped dollar
     * ladders from the same anchors as ob_snapshots) with the delta
     * stream on a shared per-event order: snapshot at 2·event_id, the
@@ -682,8 +587,8 @@ object StreamedQueries {
           lit(null).cast("int").as("price"),
           lit(null).cast("int").as("delta"),
           col("yes_dollars"), col("no_dollars")).as("msg"))
-    val emissions = replayOrdered(s,
-        deltaMsgs.unionByName(snapMsgs), col("seq"))(
+    val emissions = replay(s, deltaMsgs.unionByName(snapMsgs),
+        Ordered(col("seq")), outputMode = "append")(
         LiveBook.topOfBook(s, _).toDF())
     val w = Window.partitionBy(col("ticker"))
       .orderBy(col("last_seq").desc)
@@ -745,7 +650,7 @@ object StreamedQueries {
     val flush = s.range(1).select(lit("orderbook_delta").as("type"),
       struct(lit("ZFLUSH").as("market_ticker"),
         lit(flushTsFor(s, d, 60L * 1000)).as("ts")).as("msg"))
-    replayClosed(s, msgs, flush)(
+    replay(s, msgs, Scattered(flush = Some(flush)), outputMode = "append")(
         LiveBook.messageRatePerMinute(_, lateness = s"$WmDays days"))
       .where(col("ticker") =!= "ZFLUSH") // its window never closes
       .select(col("ticker"), unix_millis(col("window_start")).as("minute_start"),
@@ -792,7 +697,8 @@ object StreamedQueries {
       struct(lit("ZFLUSH").as("market_ticker"), lit("yes").as("side"),
         lit(flushTsFor(s, d, PairBandSec * 1000L)).as("ts"),
         lit(1).as("price"), lit(0).as("delta")).as("msg"))
-    replayClosed(s, pairMsgs(s, d), flush, chunks = 2, storeParts = 8)(
+    replay(s, pairMsgs(s, d), Scattered(2, Some(flush)),
+        outputMode = "append")(
         StreamJoins.yesNoPairs(_, watermark = s"$WmDays days",
           bandSec = PairBandSec))
       .where(col("ticker") =!= "ZFLUSH")
@@ -834,7 +740,8 @@ object StreamedQueries {
         struct(lit("ZFLUSH").as("market_ticker"),
           col("fside").as("side"), col("fts").as("ts"),
           lit(1).as("price"), lit(0).as("delta")).as("msg"))
-    replayClosed(s, pairMsgs(s, d), flush, chunks = 2, storeParts = 8)(
+    replay(s, pairMsgs(s, d), Scattered(2, Some(flush)),
+        outputMode = "append")(
         StreamJoins.yesNoPairsOuter(_, watermark = s"$WmDays days",
           bandSec = PairBandSec))
       .where(col("no_seq").isNull && col("ticker") =!= "ZFLUSH")
@@ -868,7 +775,8 @@ object StreamedQueries {
       .where(col("ticker") =!= "T7")
       .withColumn("series", concat(lit("S"),
         (substring(col("ticker"), 2, 10).cast("int") % 4).cast("string")))
-    replay(s, pairMsgs(s, d))(StreamJoins.enrichDeltas(_, dim))
+    replay(s, pairMsgs(s, d), Scattered(), RocksProvider)(
+        StreamJoins.enrichDeltas(_, dim))
       .select(col("ticker"), col("seq"), col("side"),
         col("price"), col("delta"),
         coalesce(col("series"), lit("NONE")).as("series"))
@@ -906,7 +814,7 @@ object StreamedQueries {
       .select(col("ticker"), col("side"), col("price"), col("delta"),
         col("seq"), col("ts_ms").as("ingestion_ts"),
         concat(col("ticker"), lit("-"), col("seq")).as("redis_stream_id"))
-    replay(s, feed)(
+    replay(s, feed, Scattered(), RocksProvider)(
         StreamPipeline.dedupAcrossBatches(_, delay = s"$WmDays days"))
       .groupBy(col("ticker"))
       .agg(count(lit(1)).as("n_msgs"),
@@ -929,7 +837,7 @@ object StreamedQueries {
     * handle, TTL config, processor lifecycle — the successor API to
     * st05/st06's flatMapGroupsWithState) under the driver's oracle.
     * last_seq/last_price are arrival-order state (the fold keeps the
-    * LAST applied tick), so the replay is [[replayOrdered]] on
+    * LAST applied tick), so the replay is [[Ordered]] on
     * event_id — the same production seq-ordered-feed contract as st06
     * — and the state store is the RocksDB provider transformWithState
     * requires. Final verdict per ticker = the emission at max n_msgs
@@ -941,9 +849,8 @@ object StreamedQueries {
         col("event_id"),
         struct(col("ticker").as("market_ticker"),
           col("price")).as("msg"))
-    val emissions = replayOrdered(s, msgs, col("event_id"))(
-      TickerStats.run(s, _).toDF(),
-      provider = RocksProvider, outputMode = "update")
+    val emissions = replay(s, msgs, Ordered(col("event_id")), RocksProvider)(
+      TickerStats.run(s, _).toDF())
     val w = Window.partitionBy(col("ticker"))
       .orderBy(col("n_msgs").desc)
     emissions
@@ -1243,7 +1150,6 @@ object StreamedQueries {
     * ZFLUSH row can reach the leaderboard. Oracle = the batch hourly
     * count + ROW_NUMBER ranking with the numeric-ticker tiebreak. */
   def streamTopTickers(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val msgs = Derive.deltas(s, d)
       .select(lit("orderbook_delta").as("type"),
         struct(col("ticker").as("market_ticker"),
@@ -1255,7 +1161,7 @@ object StreamedQueries {
     // operators mean double the store lifecycles per batch, same
     // trade as st08/st09 — cross-batch heap merging is still
     // exercised (rows scatter over 2 unordered chunks).
-    replayClosed(s, msgs, flush, chunks = 2)(
+    replay(s, msgs, Scattered(2, Some(flush)), outputMode = "append")(
         StreamPipeline.windowTopTickers(_, "1 hour", 3, s"$WmDays days"))
       .orderBy(col("bucket_start"), col("rnk"))
   }
@@ -1296,8 +1202,8 @@ object StreamedQueries {
   def streamNearDup(s: SparkSession, d: String): DataFrame = {
     val docs = graft.dedup.Dedup.docsAug(s, d)
       .select(col("doc_id"), col("text"))
-    val verdicts = replayOrdered(s, docs, col("doc_id"))(
-      StreamNearDup.admit(s, _), outputMode = "update")
+    val verdicts = replay(s, docs, Ordered(col("doc_id")))(
+      StreamNearDup.admit)
     verdicts.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bands"),
         sum(when(col("claimed_by") < col("doc_id"), 1L).otherwise(0L))
@@ -1344,9 +1250,8 @@ object StreamedQueries {
     * the census is a |langs|×3-group aggregate. */
   def streamCuration(s: SparkSession, d: String): DataFrame = {
     val docs = graft.dedup.Dedup.docsAug(s, d)
-    val verdicts = replayOrdered(s,
-      docs.select(col("doc_id"), col("text")), col("doc_id"))(
-      StreamNearDup.admit(s, _), outputMode = "update")
+    val verdicts = replay(s, docs.select(col("doc_id"), col("text")),
+      Ordered(col("doc_id")))(StreamNearDup.admit)
     val dup = verdicts.groupBy(col("doc_id"))
       .agg(sum(when(col("claimed_by") < col("doc_id"), 1L).otherwise(0L))
         .as("n_claimed"))
@@ -1484,8 +1389,8 @@ object StreamedQueries {
       // runs=2: full redelivery — the same staged chunks re-stream
       // against the same emission dir with a fresh checkpoint; every
       // batch re-arrives and must no-op on its commit marker
-      replayOrderedEmit(s, feed, col("doc_id"), runs = 2)(
-        StreamNearDup.admit(s, _), writer)
+      replay(s, feed, Ordered(col("doc_id")), sink = Writer(writer, runs = 2))(
+        StreamNearDup.admit)
     } finally attrs.unpersist(blocking = false)
     s.read.parquet(outDir.toString)
       .groupBy(col("split"), col("shard"))
@@ -1566,7 +1471,7 @@ object StreamedQueries {
     val toks = graft.Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
-    val emissions = replay(s, toks)(
+    val emissions = replay(s, toks, Scattered(), RocksProvider)(
       StreamHeavyHitters.run(s, _, buckets, k).toDF())
     // final snapshot per cell via a per-bucket max window — the frame
     // is STATE-sized (≤ buckets·k·batches emission rows), never

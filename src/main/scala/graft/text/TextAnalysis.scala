@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Text-analysis operators for an LLM training-data pipeline, over the
   * `documents` table: token statistics, language-ID scoring, quality
@@ -132,7 +131,6 @@ object TextAnalysis {
   /** Document fingerprint via the native PolyHash expression (rolling
     * hash over codepoints — the dedup-key primitive). */
   def fingerprint(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, d).select(
         col("doc_id"),
         call_function("graft_polyhash", col("text")).as("fingerprint"))
@@ -196,7 +194,6 @@ object TextAnalysis {
     * output, checkable cell-for-cell because the hash family is the
     * same affine-over-polyhash construction as [[graft.functions.MinHashSig]]. */
   def countMinSketch(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("tok"))
       .where(col("tok") =!= "")
@@ -331,7 +328,6 @@ object TextAnalysis {
     * <90 val, else test. Pure narrow map + one (lang, split) hash-agg —
     * 15 output rows at any corpus size. */
   def splitAssign(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val h = pmod(call_function("graft_polyhash", col("text")), lit(100))
     Tables.documents(s, d)
       .select(col("lang"),
@@ -498,7 +494,6 @@ object TextAnalysis {
     * polynomial, different input). Pure narrow map + filter: no
     * shuffle at all before the (bounded-output) ORDER BY. */
   def stratifiedSample(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val rate = when(col("lang") === "en", 500)
       .when(col("lang") === "zh", 250).otherwise(800) // per-mille
     val h = pmod(
@@ -645,7 +640,6 @@ object TextAnalysis {
     * min-k-of-union (each partition keeps its k smallest, merge keeps
     * the k smallest of those) — the property that makes KMV mergeable. */
   def kmvDistinct(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val K = 64
     val M = 1000000007L
     // raw trigram polyhashes occupy only ~[2k, 126k] (3 bounded
@@ -770,7 +764,6 @@ object TextAnalysis {
     * decision is map-side; the final rollup is a 5-group agg again —
     * two tiny-key shuffles with map-side partials, nothing wide. */
   def mixtureReweight(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import s.implicits._
     // target shares: flatten English, upsample the low-resource tail;
     // a LEFT join + 0 default (not a map lookup) so a domain outside
@@ -1211,7 +1204,6 @@ object TextAnalysis {
     * distinct train grams (content-key cardinality, grows with the
     * corpus) + doc-keyed aggregates; nothing pairwise. */
   def splitLeakage(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val h = pmod(call_function("graft_polyhash", col("text")), lit(100))
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"),
@@ -1809,7 +1801,6 @@ object TextAnalysis {
     * The exact ridealong is one vocab-keyed equi-join — at 100 TB you
     * drop that column and keep the sketches; nothing else changes. */
   def kmvOverlap(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val K = 64
     val M = 1000000007L
     val sh = Tables.documents(s, d)
@@ -2076,7 +2067,6 @@ object TextAnalysis {
     * Coverage is integer ppm (covered·10^6 div total, all
     * nonnegative), so the gate is exact. */
   def vocabCoverage(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cnt = Tables.documents(s, d)
       .select(explode(tokens).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -3225,7 +3215,6 @@ object TextAnalysis {
     * query docs doc_id < 5, top-k by bounded heap. Consumed by txt43
     * and by sim28's hybrid RRF fusion. */
   def bm25Ranked(s: SparkSession, d: String, k: Int): DataFrame = {
-    GraftFunctions.register(s)
     val dec28 = org.apache.spark.sql.types.DecimalType(28, 6)
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), explode(tokens).as("token"))
@@ -3330,7 +3319,6 @@ object TextAnalysis {
   val QlMu = 2000.0
 
   def queryLikelihood(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val dec28 = org.apache.spark.sql.types.DecimalType(28, 6)
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), explode(tokens).as("token"))

@@ -4,11 +4,12 @@ import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSpark
 
 import graft.plans.AsOfJoinNode
 
-/** The one sql-package door the custom-plan surface needs: building a
-  * DataFrame from a raw LogicalPlan (`Dataset.ofRows`) is
-  * `private[sql]`, so the constructor for [[graft.plans.AsOfJoinNode]]
-  * lives here. Nothing else reaches into Spark internals — the node,
-  * strategy, and exec are plain public-API Catalyst classes. */
+/** The one sql-package door for building a DataFrame from a raw
+  * LogicalPlan (`Dataset.ofRows` is `private[sql]`): the constructor
+  * for [[graft.plans.AsOfJoinNode]] and the session rebind the replay
+  * harness returns its memory table through. Nothing else reaches
+  * into Spark internals — the node, strategy, and exec are plain
+  * public-API Catalyst classes. */
 object GraftPlanBridge {
 
   /** Left as-of join: every left row + the columns of the latest right
@@ -29,6 +30,12 @@ object GraftPlanBridge {
       strict)
     CDataset.ofRows(l.sparkSession.asInstanceOf[CSparkSession], node)
   }
+
+  /** `df`'s analyzed plan as a frame of session `s`: it plans and runs
+    * under `s`'s conf. */
+  def rebind(df: DataFrame, s: SparkSession): DataFrame =
+    CDataset.ofRows(s.asInstanceOf[CSparkSession],
+      df.asInstanceOf[CDataset[Row]].queryExecution.analyzed)
 
   /** `AtomicType` is `private[sql]`; [[graft.plans.AsOfJoinExec]] gates
     * its codegen path on it (the types `ctx.genComp` compares inline). */

@@ -22,7 +22,6 @@ class CdcChunksGenSpec extends AnyFunSuite {
     col("txt").cast("binary").as("payload"))
 
   test("generator digests equal the declarative cuts spelling") {
-    GraftFunctions.register(spark)
     val viaGen = payloads
       .select(col("media_id"),
         expr("graft_cdc_chunks(payload)").as(Seq("dg", "blen")))
@@ -53,7 +52,6 @@ class CdcChunksGenSpec extends AnyFunSuite {
   }
 
   test("usable from SQL text via LATERAL VIEW; null payload emits no rows") {
-    GraftFunctions.register(spark)
     payloads.createOrReplaceTempView("cdc_gen_fixture")
     val n = spark.sql(
       """SELECT media_id, c.dg, c.blen
@@ -70,7 +68,6 @@ class CdcChunksGenSpec extends AnyFunSuite {
   }
 
   test("identical payloads share every chunk digest") {
-    GraftFunctions.register(spark)
     val dgs = payloads
       .select(col("media_id"),
         expr("graft_cdc_chunks(payload)").as(Seq("dg", "blen")))

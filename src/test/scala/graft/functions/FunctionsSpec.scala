@@ -10,7 +10,6 @@ class FunctionsSpec extends AnyFunSuite {
   private val P = 1000000007L
 
   private def one[T](sql: String): T = {
-    GraftFunctions.register(spark)
     spark.sql(s"SELECT $sql AS v").head.getAs[T]("v")
   }
 

@@ -15,7 +15,6 @@ class TopKSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.init()
 
   private def scored(n: Int, nQueries: Int) = {
-    GraftFunctions.register(spark)
     spark.range(0, n, 1, 16).selectExpr(
       s"id % $nQueries AS query_id",
       "id AS neighbor_id",
@@ -59,7 +58,6 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("null scores and null tiebreaks are skipped, not ranked") {
-    GraftFunctions.register(spark)
     val df = spark.range(0, 100, 1, 8).selectExpr(
       "id % 2 AS query_id",
       "id AS neighbor_id",
@@ -72,7 +70,6 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("bad arguments are rejected at analysis, not as a runtime CCE") {
-    GraftFunctions.register(spark)
     val df = scored(10, 2)
     def agg(scoreE: String, tieE: String, kE: String) =
       df.groupBy("query_id").agg(expr(

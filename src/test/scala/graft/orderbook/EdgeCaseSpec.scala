@@ -36,7 +36,6 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("empty text produces empty shingle sets, not crashes") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_shingle_hashes('') AS a, graft_shingle_hashes('ab') AS b, graft_minhash32(array()) AS m")
       .head

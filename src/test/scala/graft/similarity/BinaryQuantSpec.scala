@@ -15,7 +15,6 @@ class BinaryQuantSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("sim23 sign-bit packing matches an independent Scala fold") {
-    graft.functions.GraftFunctions.register(spark)
     val packed = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
       .withColumn("sig", expr(
@@ -49,7 +48,6 @@ class BinaryQuantSpec extends AnyFunSuite {
     val out = Similarity.binaryHamming(spark, dir)
       .select("query_id", "neighbor_id", "cosine").collect()
     assert(out.nonEmpty)
-    graft.functions.GraftFunctions.register(spark)
     val n = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))

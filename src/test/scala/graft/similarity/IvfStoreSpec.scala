@@ -28,7 +28,6 @@ class IvfStoreSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def inc() = {
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))

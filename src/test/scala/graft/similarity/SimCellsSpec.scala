@@ -20,7 +20,6 @@ class SimCellsSpec extends AnyFunSuite {
   /** sim03 re-spelled with Window row_number ranking and an explicit
     * cell count — shares no ranking/selection code with the engine. */
   private def refIvf(s: SparkSession, d: String, cells: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val n = graft.Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))

@@ -46,7 +46,6 @@ class StreamIvfSpec extends AnyFunSuite {
     import spark.implicits._
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.GraftFunctions.register(spark)
     val n = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("e"))

@@ -34,7 +34,7 @@ class StreamNearDupSpec extends AnyFunSuite {
     }
     stage(Seq((1L, dupText)), "b1.parquet", 120000)
     stage(Seq((2L, dupText), (3L, freshText)), "b2.parquet", 60000)
-    val q = StreamNearDup.admit(spark,
+    val q = StreamNearDup.admit(
         spark.readStream
           .schema("doc_id LONG, text STRING")
           .option("maxFilesPerTrigger", 1).parquet(in.toString))
@@ -90,7 +90,7 @@ class StreamNearDupSpec extends AnyFunSuite {
     // b4: doc 2, IDENTICAL text — every band it claims was evicted,
     // so it must be re-admitted as the new owner (claimed_by = 2)
     stage(Seq((2L, dupText, T0 + 12 * min)), "b4.parquet", 60000)
-    val q = StreamNearDup.admitTtl(spark,
+    val q = StreamNearDup.admitTtl(
         spark.readStream
           .schema("doc_id LONG, text STRING, ts TIMESTAMP")
           .option("maxFilesPerTrigger", 1).parquet(in.toString),

@@ -28,8 +28,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming replay produces the exact snapshot fact rows") {
     val in = tmp("graft-in"); val out = tmp("graft-out")
     writeLines(in, "messages.ndjson", Fixtures.ndjsonLines)
-    StreamPipeline.run(spark, in.toString, out.toString)
-      .foreach(_.awaitTermination())
+    StreamPipeline.runUnified(spark, in.toString, out.toString)
+      .awaitTermination()
 
     val snaps = spark.read.parquet(s"$out/orderbook_snapshots")
     // 6 snapshots (2 per ticker) × 2 sides × 3 levels
@@ -47,8 +47,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming replay produces the exact delta fact rows") {
     val in = tmp("graft-in"); val out = tmp("graft-out")
     writeLines(in, "messages.ndjson", Fixtures.ndjsonLines)
-    StreamPipeline.run(spark, in.toString, out.toString)
-      .foreach(_.awaitTermination())
+    StreamPipeline.runUnified(spark, in.toString, out.toString)
+      .awaitTermination()
 
     val deltas = spark.read.parquet(s"$out/orderbook_deltas")
     assert(deltas.count() === Fixtures.deltas.size)
@@ -72,12 +72,12 @@ class StreamingSpec extends AnyFunSuite {
   test("restart with the same checkpoint appends nothing (exactly-once)") {
     val in = tmp("graft-in"); val out = tmp("graft-out")
     writeLines(in, "messages.ndjson", Fixtures.ndjsonLines)
-    StreamPipeline.run(spark, in.toString, out.toString)
-      .foreach(_.awaitTermination())
+    StreamPipeline.runUnified(spark, in.toString, out.toString)
+      .awaitTermination()
     val n1 = spark.read.parquet(s"$out/orderbook_deltas").count()
     // same input, same checkpoint → the WAL marks every file processed
-    StreamPipeline.run(spark, in.toString, out.toString)
-      .foreach(_.awaitTermination())
+    StreamPipeline.runUnified(spark, in.toString, out.toString)
+      .awaitTermination()
     val n2 = spark.read.parquet(s"$out/orderbook_deltas").count()
     assert(n1 === n2)
   }
