@@ -48,16 +48,14 @@ object Bench {
       math.max(256L, 8L * math.round(math.sqrt(perTicker.toDouble))))
     spark.conf.set("spark.graft.scanBucketRows", targetRows.toString)
     System.err.println(s"[bench] scanBucketRows=$targetRows (events=$nEvents)")
-    // Optional args = query-name filter (substring match on the full
-    // registry name) for iterating on one query's plan without paying
-    // for the whole suite. The driver invokes with no args → full run.
+    // Optional args = registry-name prefixes (`st` = the stream family)
+    // for iterating on one query's plan without paying for the whole
+    // suite. The driver invokes with no args → full run.
     val wanted = args.toSeq
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => wanted.exists(n.contains) }
+    val selected = SparkEntry.select(wanted)
     // Registry-prefix uniqueness gates the whole run — check BEFORE
     // spending two benchmark passes on it.
-    val names = selected.keys.toSeq
+    val names = selected.map(_.name)
     require(names.map(_.takeWhile(_ != '_')).distinct.size == names.size,
       "bench short names collide; fix the registry prefixes")
     // Warm the JVM/codegen/IO paths once so query #1 doesn't absorb all
@@ -107,7 +105,7 @@ object Bench {
     // fast failure can never masquerade as a fast run; a query that
     // fails BOTH passes reports -1 (and its stderr failure lines).
     def onePass(tag: String): Seq[(String, Option[Double])] = {
-      val out = selected.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+      val out = selected.zipWithIndex.map { case (Op(name, fn, _, _), i) =>
         if (i > 0 && i % ProbeEvery == 0) runProbe()
         val t0 = System.nanoTime()
         val ok =
@@ -143,7 +141,7 @@ object Bench {
     // EXPECTATION: the previous committed record (bench_last.json,
     // written by the prior invocation). Any query whose min-of-2
     // exceeds its threshold × prior record (3×; 2× for the
-    // IO-layout set below — and isn't sub-half-second noise)
+    // Op.IoLayout tag below — and isn't sub-half-second noise)
     // gets a THIRD measurement at a different wall-clock offset:
     //  - third run ≤ prior×3 ⇒ the 2-pass min was contamination; the
     //    record keeps the third-pass value and lists the key under
@@ -189,18 +187,16 @@ object Bench {
     // parquet per run) distort under co-tenant DISK pressure well below
     // the CPU-bound 3× mark — round 14 shipped them at 2.0-2.6× with no
     // flag. Their tripwire is 2×.
-    val ioLayoutKeys = Set("op03", "op06", "op07", "op13", "op14")
-    def threshold(n: String): Double =
-      if (ioLayoutKeys(prefix(n))) 2.0 else 3.0
-    val escalate = names.filter { n =>
-      val m = mins0(n)
-      m > 0.5 &&
-        prior.get(prefix(n)).exists(p => p > 0 && m > threshold(n) * p)
+    def threshold(o: Op): Double = if (o.tags(Op.IoLayout)) 2.0 else 3.0
+    val escalate = selected.filter { o =>
+      val m = mins0(o.name)
+      m > 0.5 && prior.get(prefix(o.name))
+        .exists(p => p > 0 && m > threshold(o) * p)
     }
-    val thirds: Map[String, Double] = escalate.map { n =>
+    val thirds: Map[String, Double] = escalate.map { case Op(n, fn, _, _) =>
       val t0 = System.nanoTime()
       val ok = try {
-        selected(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         true
       } catch { case _: Throwable => false }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -209,9 +205,11 @@ object Bench {
         f"min2 ${mins0(n)}%.2f vs prior ${prior(prefix(n))}%.2f)")
       n -> (if (ok) sec else -1.0)
     }.toMap
-    val contaminated = escalate.filter(n =>
-      thirds(n) > 0 && thirds(n) <= threshold(n) * prior(prefix(n)))
-    val suspect = escalate.filterNot(contaminated.contains)
+    val contaminated = escalate.filter { o =>
+      val t = thirds(o.name)
+      t > 0 && t <= threshold(o) * prior(prefix(o.name))
+    }.map(_.name)
+    val suspect = escalate.map(_.name).filterNot(contaminated.contains)
     if (contaminated.nonEmpty)
       System.err.println("[bench] CONTAMINATED (2-pass min disproved by " +
         s"pass 3, record keeps pass 3): ${contaminated.mkString(", ")}")
@@ -253,8 +251,9 @@ object Bench {
     // lifecycle floor (~2.5-4 s each) that would otherwise mask batch
     // regressions inside the grand total as the family grows — report
     // both sub-totals alongside the contract's grand total.
+    val streamNames = selected.filter(_.tags(Op.Stream)).map(_.name).toSet
     val streamTotal = results
-      .filter { case (n, v) => n.startsWith("st") && v >= 0 }.map(_._2).sum
+      .filter { case (n, v) => streamNames(n) && v >= 0 }.map(_._2).sum
     val batchTotal = total - streamTotal
     val nFailed = results.count(_._2 < 0)
     val sfName = new java.io.File(sfDir).getName

@@ -1,18 +1,16 @@
 package graft
 
-/** Plan inspector: `sbt "runMain graft.Explain <sfDir> <query>..."`
-  * prints the formatted physical plan of each named registered query
-  * (all of them if none named). The iterate-on-the-plan loop the
-  * 100 TB design review runs on. */
+/** Plan inspector: `sbt "runMain graft.Explain <sfDir> <prefix>..."`
+  * prints the formatted physical plan of each registered query whose
+  * name starts with a given prefix (all of them if none given). The
+  * iterate-on-the-plan loop the 100 TB design review runs on. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq
-                else SparkEntry.queries.keys.toSeq
     val spark = GraftSession.local()
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    SparkEntry.select(args.drop(1).toSeq).foreach { o =>
+      println(s"\n========== ${o.name} ==========")
+      o.run(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

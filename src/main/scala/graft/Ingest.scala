@@ -5,7 +5,6 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.orderbook.Normalize
 import graft.streaming.{Connectors, JdbcSink, QueueLog, Signing, StreamPipeline}
 
 /** The deployable composed pipeline — the reference's `__main__.py:7-13`
@@ -119,14 +118,11 @@ object Ingest {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         batch.persist()
         try {
-          JdbcSink.appendExactlyOnce(
-            Normalize.dedupReplays(StreamPipeline.routeSnapshots(batch),
-              Seq("redis_stream_id", "side", "price_dollars")),
+          val (snapshots, deltas) = StreamPipeline.facts(batch)
+          JdbcSink.appendExactlyOnce(snapshots,
             cfg.jdbcUrl, "orderbook_snapshots",
             JdbcSink.snapshotColumnTypes, props, s"$qid#snapshots", batchId)
-          JdbcSink.appendExactlyOnce(
-            Normalize.dedupReplays(StreamPipeline.routeDeltas(batch),
-              Seq("redis_stream_id")),
+          JdbcSink.appendExactlyOnce(deltas,
             cfg.jdbcUrl, "orderbook_deltas",
             JdbcSink.deltaColumnTypes, props, s"$qid#deltas", batchId)
           cfg.deadLetterDir.foreach { d =>

@@ -4,9 +4,26 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, the Spark plan over the parquet
+  * tables in sfDir, the DuckDB-equivalent SQL that gates it, and the
+  * family tags the harness mains select by. */
+final case class Op(name: String, run: (SparkSession, String) => DataFrame,
+    oracleSql: String, tags: Set[String] = Set.empty)
+
+object Op {
+  /** The replayed streaming queries (st01–st20); Bench reports their
+    * sum as `stream_total`. */
+  val Stream = "stream"
+  /** Queries that re-materialize partitioned / z-ordered / bucketed /
+    * sampled parquet per run; Bench escalates them at 2× their prior
+    * time instead of 3×. */
+  val IoLayout = "io-layout"
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Aggregates the per-module query registries. Every query is a
+  * A query is one [[Op]] line in its module's `ops`; this object
+  * concatenates the modules' lists. Every query is a
   * `(SparkSession, sfDir) => DataFrame` over the parquet tables in sfDir;
   * `oracleSql` carries the DuckDB-equivalent SQL for hash comparison
   * (column names must match exactly — see module scaladoc for the
@@ -20,44 +37,39 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     orderbook.Analytics.bookAsOf(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ListMap(relational.Relational.queries ++
-      relational.Advanced.queries ++
-      relational.Maintenance.queries ++
-      orderbook.Analytics.queries ++
-      text.TextAnalysis.queries ++
-      dedup.Dedup.queries ++
-      similarity.Similarity.queries ++
-      multimodal.Multimodal.queries ++
-      streaming.StreamedQueries.queries ++
-      operators.Salting.queries ++
-      operators.Sampling.queries ++
-      operators.Pruning.queries ++
-      operators.Bucketed.queries ++
-      operators.Reuse.queries ++
-      operators.Observability.queries ++
-      operators.RuntimeFilter.queries ++
-      operators.Skyline.queries: _*)
+  /** Every registered query, in registry order. */
+  lazy val ops: Seq[Op] =
+    relational.Relational.ops ++
+      relational.Advanced.ops ++
+      relational.Maintenance.ops ++
+      orderbook.Analytics.ops ++
+      text.TextAnalysis.ops ++
+      dedup.Dedup.ops ++
+      similarity.Similarity.ops ++
+      multimodal.Multimodal.ops ++
+      streaming.StreamedQueries.ops ++
+      operators.Salting.ops ++
+      operators.Sampling.ops ++
+      operators.Pruning.ops ++
+      operators.Bucketed.ops ++
+      operators.Reuse.ops ++
+      operators.Observability.ops ++
+      operators.RuntimeFilter.ops ++
+      operators.Skyline.ops
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ListMap(relational.Relational.oracles ++
-      relational.Advanced.oracles ++
-      relational.Maintenance.oracles ++
-      orderbook.Analytics.oracles ++
-      text.TextAnalysis.oracles ++
-      dedup.Dedup.oracles ++
-      similarity.Similarity.oracles ++
-      multimodal.Multimodal.oracles ++
-      streaming.StreamedQueries.oracles ++
-      operators.Salting.oracles ++
-      operators.Sampling.oracles ++
-      operators.Pruning.oracles ++
-      operators.Bucketed.oracles ++
-      operators.Reuse.oracles ++
-      operators.Observability.oracles ++
-      operators.RuntimeFilter.oracles ++
-      operators.Skyline.oracles: _*)
+  /** Each query's plan by name, in registry order. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ListMap(ops.map(o => o.name -> o.run): _*)
+
+  /** For each key in queries, in the same order, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    ListMap(ops.map(o => o.name -> o.oracleSql): _*)
+
+  /** The one selection rule of Bench, Verify and Explain: no arguments
+    * selects every query; otherwise a query is selected when its name
+    * starts with any argument (`st` is the stream family, `op04` is
+    * op04_runtime_filter). Registry order is kept. */
+  def select(args: Seq[String]): Seq[Op] =
+    if (args.isEmpty) ops else ops.filter(o => args.exists(o.name.startsWith))
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
@@ -65,17 +65,14 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only — the driver passes 2):
     // comma-separated name prefixes to restrict the dump to
-    val only: Option[Seq[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSeq) else None
+    val selected =
+      SparkEntry.select(args.lift(2).toSeq.flatMap(_.split(',')))
     val spark = GraftSession.local()
     System.err.println(
       s"[verify] durable seam cache: ${GraftSession.enableDurableSeams(spark)}")
-    val failed = dump(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith)) })
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val failed = dump(spark, sfDir, outDir, selected.map(o => o.name -> o.run))
+    val json = selected.map(o => s"${q(o.name)}: ${q(o.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Machine-readable failure summary alongside the dumps — a gate that
     // only counts green parquet dirs can cross-check against this.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Deduplication operators for an LLM training-data pipeline: exact
   * (hash-groupBy), n-gram Jaccard, MinHash+LSH banding, SimHash
@@ -2662,60 +2662,34 @@ object Dedup {
       |  ON n.split = o.split AND n.shard = o.shard
       |ORDER BY split, shard""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "dd25_incremental_curation" -> (incrementalCurationManifest _),
-    "dd24_curation_manifest" -> (curationManifest _),
-    "dd22_keeper_election" -> (keeperElection _),
-    "dd23_cluster_split" -> (clusterSplit _),
-    "dd21_winnow_substrings" -> (winnowSubstrings _),
-    "dd01_exact_groups" -> (exactGroups _),
-    "dd02_exact_dedup" -> (exactDedup _),
-    "dd19_capped_clusters" -> (cappedClusters _),
-    "dd20_lsh_bucket_audit" -> (lshBucketAudit _),
-    "dd03_ngram_jaccard" -> (ngramJaccard _),
-    "dd04_simhash_buckets" -> (simhashBuckets _),
-    "dd05_minhash_lsh" -> (minhashLsh _),
-    "dd06_embed_neardup" -> (embedNearDup _),
-    "dd07_dup_clusters" -> (dupClusters _),
-    "dd08_decontaminate" -> (decontaminate _),
-    "dd09_star_clusters" -> (starClusters _),
-    "dd10_bloom_decontaminate" -> (decontaminateBloom _),
-    "dd11_fuzzy_link" -> (FuzzyLink.fuzzyLink _),
-    "dd12_prefix_clusters" -> (prefixClusters _),
-    "dd13_containment" -> (containmentPairs _),
-    "dd14_incremental" -> (incrementalDedup _),
-    "dd15_sketch_calibration" -> (sketchCalibration _),
-    "dd16_fuzzy_decontaminate" -> (fuzzyDecontaminate _),
-    "dd17_cluster_cohesion" -> (clusterCohesion _),
-    "dd18_incremental_neardup" -> (incrementalNearDup _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "dd25_incremental_curation" -> incrementalCurationSql,
-    "dd24_curation_manifest" -> curationManifestSql,
-    "dd22_keeper_election" -> keeperElectionSql,
-    "dd23_cluster_split" -> clusterSplitSql,
-    "dd21_winnow_substrings" -> winnowSubstringsSql,
-    "dd01_exact_groups" -> exactGroupsSql,
-    "dd02_exact_dedup" -> exactDedupSql,
-    "dd19_capped_clusters" -> cappedClustersSql,
-    "dd20_lsh_bucket_audit" -> lshBucketAuditSql,
-    "dd03_ngram_jaccard" -> ngramJaccardSql,
-    "dd04_simhash_buckets" -> simhashBucketsSql,
-    "dd05_minhash_lsh" -> minhashLshSql,
-    "dd06_embed_neardup" -> embedNearDupSql,
-    "dd07_dup_clusters" -> dupClustersSql,
-    "dd08_decontaminate" -> decontaminateSql,
+  val ops: Seq[Op] = Seq(
+    Op("dd25_incremental_curation", incrementalCurationManifest,
+      incrementalCurationSql),
+    Op("dd24_curation_manifest", curationManifest, curationManifestSql),
+    Op("dd22_keeper_election", keeperElection, keeperElectionSql),
+    Op("dd23_cluster_split", clusterSplit, clusterSplitSql),
+    Op("dd21_winnow_substrings", winnowSubstrings, winnowSubstringsSql),
+    Op("dd01_exact_groups", exactGroups, exactGroupsSql),
+    Op("dd02_exact_dedup", exactDedup, exactDedupSql),
+    Op("dd19_capped_clusters", cappedClusters, cappedClustersSql),
+    Op("dd20_lsh_bucket_audit", lshBucketAudit, lshBucketAuditSql),
+    Op("dd03_ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    Op("dd04_simhash_buckets", simhashBuckets, simhashBucketsSql),
+    Op("dd05_minhash_lsh", minhashLsh, minhashLshSql),
+    Op("dd06_embed_neardup", embedNearDup, embedNearDupSql),
+    Op("dd07_dup_clusters", dupClusters, dupClustersSql),
+    Op("dd08_decontaminate", decontaminate, decontaminateSql),
     // dd09 computes the SAME clusters as dd07 by a different algorithm;
     // one oracle pins both to one answer
-    "dd09_star_clusters" -> dupClustersSql,
+    Op("dd09_star_clusters", starClusters, dupClustersSql),
     // the bloom is routing only — dd10's answer is exactly dd08's
-    "dd10_bloom_decontaminate" -> decontaminateSql,
-    "dd11_fuzzy_link" -> FuzzyLink.fuzzyLinkSql,
-    "dd12_prefix_clusters" -> prefixClustersSql,
-    "dd13_containment" -> containmentPairsSql,
-    "dd14_incremental" -> incrementalDedupSql,
-    "dd15_sketch_calibration" -> sketchCalibrationSql,
-    "dd16_fuzzy_decontaminate" -> fuzzyDecontaminateSql,
-    "dd17_cluster_cohesion" -> clusterCohesionSql,
-    "dd18_incremental_neardup" -> incrementalNearDupSql)
+    Op("dd10_bloom_decontaminate", decontaminateBloom, decontaminateSql),
+    Op("dd11_fuzzy_link", FuzzyLink.fuzzyLink, FuzzyLink.fuzzyLinkSql),
+    Op("dd12_prefix_clusters", prefixClusters, prefixClustersSql),
+    Op("dd13_containment", containmentPairs, containmentPairsSql),
+    Op("dd14_incremental", incrementalDedup, incrementalDedupSql),
+    Op("dd15_sketch_calibration", sketchCalibration, sketchCalibrationSql),
+    Op("dd16_fuzzy_decontaminate", fuzzyDecontaminate, fuzzyDecontaminateSql),
+    Op("dd17_cluster_cohesion", clusterCohesion, clusterCohesionSql),
+    Op("dd18_incremental_neardup", incrementalNearDup, incrementalNearDupSql))
 }

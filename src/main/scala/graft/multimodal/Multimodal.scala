@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Multimodal-column plumbing for a training-data pipeline: media as
   * opaque `binary` payloads with a typed metadata struct, plus the
@@ -700,29 +700,17 @@ object Multimodal {
       |ORDER BY 1, 2""".stripMargin
 
   // ----------------------------------------------------------- registry
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "mm01_blob_stats" -> (blobStats _),
-    "mm02_frame_sample" -> (frameSample _),
-    "mm03_decode_features" -> (decodeFeatures _),
-    "mm04_resize" -> (resizeMeta _),
-    "mm05_phash_neardup" -> (phashNearDup _),
-    "mm06_phash_clusters" -> (phashClusters _),
-    "mm07_chunk_dedup" -> (chunkDedup _),
-    "mm08_chunk_savings" -> (chunkSavings _),
-    "mm09_shared_frames" -> (sharedFrames _),
-    "mm10_resize_checksum" -> (resizeChecksum _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "mm01_blob_stats" -> blobStatsSql,
-    "mm02_frame_sample" -> frameSampleSql,
-    "mm03_decode_features" -> decodeFeaturesSql,
-    "mm04_resize" -> resizeMetaSql,
-    "mm05_phash_neardup" -> phashNearDupSql,
-    "mm06_phash_clusters" -> phashClustersSql,
-    "mm07_chunk_dedup" -> chunkDedupSql,
-    "mm08_chunk_savings" -> chunkSavingsSql,
-    "mm09_shared_frames" -> sharedFramesSql,
-    "mm10_resize_checksum" -> resizeChecksumSql)
+  val ops: Seq[Op] = Seq(
+    Op("mm01_blob_stats", blobStats, blobStatsSql),
+    Op("mm02_frame_sample", frameSample, frameSampleSql),
+    Op("mm03_decode_features", decodeFeatures, decodeFeaturesSql),
+    Op("mm04_resize", resizeMeta, resizeMetaSql),
+    Op("mm05_phash_neardup", phashNearDup, phashNearDupSql),
+    Op("mm06_phash_clusters", phashClusters, phashClustersSql),
+    Op("mm07_chunk_dedup", chunkDedup, chunkDedupSql),
+    Op("mm08_chunk_savings", chunkSavings, chunkSavingsSql),
+    Op("mm09_shared_frames", sharedFrames, sharedFramesSql),
+    Op("mm10_resize_checksum", resizeChecksum, resizeChecksumSql))
 }
 
 /** Real image decode via the JDK's own `javax.imageio` (PNG / JPEG /

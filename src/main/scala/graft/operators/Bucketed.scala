@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Bucketed co-located join as an oracle-gated operator (op07) — the
   * 100 TB amortized-shuffle story, promoted from suite-only
@@ -127,11 +127,7 @@ object Bucketed {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op07_bucketed_join" -> (bucketedJoin _),
-    "op11_sorted_bucket_join" -> (sortedBucketJoin _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op07_bucketed_join" -> bucketedJoinSql,
-    "op11_sorted_bucket_join" -> sortedBucketJoinSql)
+  val ops: Seq[Op] = Seq(
+    Op("op07_bucketed_join", bucketedJoin, bucketedJoinSql, Set(Op.IoLayout)),
+    Op("op11_sorted_bucket_join", sortedBucketJoin, sortedBucketJoinSql))
 }

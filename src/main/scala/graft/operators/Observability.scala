@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.Op
+
 /** Pipeline observability via Spark's `observe()` (CollectMetrics):
   * named aggregate metrics computed ON the rows flowing through a
   * stage, during the job that runs it — no second pass over the data,
@@ -59,10 +61,6 @@ object Observability {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin
 
-  val queries: Seq[(String,
-      (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
-    Seq("op10_observed_filter" -> (observedFilter _))
-
-  val oracles: Seq[(String, String)] =
-    Seq("op10_observed_filter" -> observedFilterSql)
+  val ops: Seq[Op] = Seq(
+    Op("op10_observed_filter", observedFilter, observedFilterSql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Partition PRUNING as an oracle-gated operator (op03): the
   * directory-partitioned layout + partition-filter scan that lets a
@@ -205,13 +205,9 @@ object Pruning {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op03_partition_pruned" -> (partitionPruned _),
-    "op06_dpp_join" -> (dppJoin _),
-    "op13_zorder_scan" -> (zorderScan _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op03_partition_pruned" -> partitionPrunedSql,
-    "op06_dpp_join" -> dppJoinSql,
-    "op13_zorder_scan" -> zorderScanSql)
+  val ops: Seq[Op] = Seq(
+    Op("op03_partition_pruned", partitionPruned, partitionPrunedSql,
+      Set(Op.IoLayout)),
+    Op("op06_dpp_join", dppJoin, dppJoinSql, Set(Op.IoLayout)),
+    Op("op13_zorder_scan", zorderScan, zorderScanSql, Set(Op.IoLayout)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** op09 — EXCHANGE REUSE under the oracle gate: when one query consumes
   * the SAME shuffled subtree twice, the engine must shuffle it once and
@@ -62,9 +62,6 @@ object Reuse {
       |FROM daily GROUP BY event_type
       |ORDER BY day_ms, event_type""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op09_exchange_reuse" -> (exchangeReuse _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op09_exchange_reuse" -> exchangeReuseSql)
+  val ops: Seq[Op] = Seq(
+    Op("op09_exchange_reuse", exchangeReuse, exchangeReuseSql))
 }

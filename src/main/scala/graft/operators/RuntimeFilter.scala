@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Spark's OWN runtime bloom-filter injection as an oracle-gated
   * operator (op04) — the optimizer-automated twin of dd10's hand-built
@@ -60,9 +60,6 @@ object RuntimeFilter {
       |GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op04_runtime_filter" -> (runtimeFiltered _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op04_runtime_filter" -> runtimeFilteredSql)
+  val ops: Seq[Op] = Seq(
+    Op("op04_runtime_filter", runtimeFiltered, runtimeFilteredSql))
 }

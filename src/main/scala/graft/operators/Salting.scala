@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Skew mitigation for hot keys. AQE's skew-join handles sort-merge
   * skew at runtime; explicit salting is the planned-ahead variant for
@@ -207,15 +207,9 @@ object Salting {
       |GROUP BY lang, source
       |ORDER BY lang, source""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op01_salted_agg" -> (saltedLangStats _),
-    "op02_salted_join" -> (saltedDimJoin _),
-    "op05_aqe_skew_join" -> (aqeSkewJoin _),
-    "op08_aqe_coalesce" -> (aqeCoalesce _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op01_salted_agg" -> saltedLangStatsSql,
-    "op02_salted_join" -> saltedDimJoinSql,
-    "op05_aqe_skew_join" -> aqeSkewJoinSql,
-    "op08_aqe_coalesce" -> aqeCoalesceSql)
+  val ops: Seq[Op] = Seq(
+    Op("op01_salted_agg", saltedLangStats, saltedLangStatsSql),
+    Op("op02_salted_join", saltedDimJoin, saltedDimJoinSql),
+    Op("op05_aqe_skew_join", aqeSkewJoin, aqeSkewJoinSql),
+    Op("op08_aqe_coalesce", aqeCoalesce, aqeCoalesceSql))
 }

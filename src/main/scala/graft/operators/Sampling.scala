@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Deterministic corpus sampling — the dataset-curation step every
   * training-data pipeline runs between dedup and training: cut each
@@ -307,15 +307,11 @@ object Sampling {
       .drop("hk")
   }
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] =
-    Seq("op12_stratified_sample" -> (stratifiedSample _),
-      "op14_priority_sample" -> (prioritySample _),
-      "op15_group_priority_sample" -> (groupPrioritySample _),
-      "op16_corpus_shards" -> (corpusShards _))
-
-  val oracles: Seq[(String, String)] =
-    Seq("op12_stratified_sample" -> stratifiedSampleSql,
-      "op14_priority_sample" -> prioritySampleSql,
-      "op15_group_priority_sample" -> groupPrioritySampleSql,
-      "op16_corpus_shards" -> corpusShardsSql)
+  val ops: Seq[Op] = Seq(
+    Op("op12_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Op("op14_priority_sample", prioritySample, prioritySampleSql,
+      Set(Op.IoLayout)),
+    Op("op15_group_priority_sample", groupPrioritySample,
+      groupPrioritySampleSql),
+    Op("op16_corpus_shards", corpusShards, corpusShardsSql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.text.TextAnalysis
 
 /** op17 — the SKYLINE operator (Börzsönyi, Kossmann & Stocker, ICDE
@@ -122,9 +122,6 @@ object Skyline {
        |    AND (e.sscore > d.sscore OR e.n_chars > d.n_chars))
        |ORDER BY d.sscore DESC, d.doc_id""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "op17_skyline_select" -> (skylineSelect _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "op17_skyline_select" -> skylineSelectSql)
+  val ops: Seq[Op] = Seq(
+    Op("op17_skyline_select", skylineSelect, skylineSelectSql))
 }

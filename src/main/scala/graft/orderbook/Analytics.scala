@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 
+import graft.Op
+
 /** The analytic query surface of the reference's order-book tables
   * (SURVEY.md §2B, B1–B9) plus the A-operator batch twins (A3 seq
   * validation, A10 explode, A11 flatten, A15 dedup), over the derived
@@ -1685,79 +1687,41 @@ object Analytics {
       |FROM vp_b GROUP BY 1, 2
       |ORDER BY ticker, day""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "ob01_snapshot_explode" -> (snapshotExplode _),
-    "ob02_delta_flatten" -> (deltaFlatten _),
-    "ob03_book_asof" -> (bookAsOf _),
-    "ob04_book_running" -> (bookRunning _),
-    "ob05_best_bid" -> (bestBid _),
-    "ob06_spread_mid" -> (spreadMid _),
-    "ob07_depth" -> (depth _),
-    "ob08_ohlc_daily" -> (ohlcDaily _),
-    "ob09_seq_gaps" -> (seqGaps _),
-    "ob10_msg_rate" -> (msgRate _),
-    "ob11_latency" -> (latency _),
-    "ob12_dedup_replay" -> (dedupReplay _),
-    "ob13_dup_audit" -> (dupAudit _),
-    "ob14_asof_price" -> (asofPrice _),
-    "ob19_asof_tolerance" -> (asofTolerance _),
-    "ob15_vwap" -> (vwap _),
-    "ob16_flow_imbalance" -> (flowImbalance _),
-    "ob17_microprice" -> (microprice _),
-    "ob18_realized_var" -> (realizedVariance _),
-    "ob20_twap" -> (twap _),
-    "ob21_price_impact" -> (priceImpact _),
-    "ob22_return_autocorr" -> (returnAutocorr _),
-    "ob23_eff_spread" -> (effectiveSpread _),
-    "ob24_amihud" -> (amihud _),
-    "ob25_roll_spread" -> (rollSpread _),
-    "ob26_candle_resample" -> (candleResample _),
-    "ob27_variance_ratio" -> (varianceRatio _),
-    "ob28_vpin" -> (vpin _),
-    "ob29_asof_native" -> (asofNative _),
-    "ob30_asof_native_strict" -> (asofNativeStrict _),
-    "ob31_book_conservation" -> (bookConservation _),
-    "ob32_flow_predictability" -> (flowPredictability _),
-    "ob33_weighted_imbalance" -> (weightedImbalance _),
-    "ob34_asof_composite" -> (asofComposite _),
-    "ob35_lee_ready" -> (leeReady _),
-    "ob36_asof_sql" -> (asofSqlTvf _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "ob01_snapshot_explode" -> snapshotExplodeSql,
-    "ob02_delta_flatten" -> deltaFlattenSql,
-    "ob03_book_asof" -> bookAsOfSql,
-    "ob04_book_running" -> bookRunningSql,
-    "ob05_best_bid" -> bestBidSql,
-    "ob06_spread_mid" -> spreadMidSql,
-    "ob07_depth" -> depthSql,
-    "ob08_ohlc_daily" -> ohlcDailySql,
-    "ob09_seq_gaps" -> seqGapsSql,
-    "ob10_msg_rate" -> msgRateSql,
-    "ob11_latency" -> latencySql,
-    "ob12_dedup_replay" -> dedupReplaySql,
-    "ob13_dup_audit" -> dupAuditSql,
-    "ob14_asof_price" -> asofPriceSql,
-    "ob19_asof_tolerance" -> asofToleranceSql,
-    "ob15_vwap" -> vwapSql,
-    "ob16_flow_imbalance" -> flowImbalanceSql,
-    "ob17_microprice" -> micropriceSql,
-    "ob18_realized_var" -> realizedVarianceSql,
-    "ob20_twap" -> twapSql,
-    "ob21_price_impact" -> priceImpactSql,
-    "ob22_return_autocorr" -> returnAutocorrSql,
-    "ob23_eff_spread" -> effectiveSpreadSql,
-    "ob24_amihud" -> amihudSql,
-    "ob25_roll_spread" -> rollSpreadSql,
-    "ob26_candle_resample" -> candleResampleSql,
-    "ob27_variance_ratio" -> varianceRatioSql,
-    "ob28_vpin" -> vpinSql,
-    "ob29_asof_native" -> asofPriceSql,
-    "ob30_asof_native_strict" -> asofToleranceSql,
-    "ob31_book_conservation" -> bookConservationSql,
-    "ob32_flow_predictability" -> flowPredictabilitySql,
-    "ob33_weighted_imbalance" -> weightedImbalanceSql,
-    "ob34_asof_composite" -> asofCompositeSql,
-    "ob35_lee_ready" -> leeReadySql,
-    "ob36_asof_sql" -> asofPriceSql)
+  val ops: Seq[Op] = Seq(
+    Op("ob01_snapshot_explode", snapshotExplode, snapshotExplodeSql),
+    Op("ob02_delta_flatten", deltaFlatten, deltaFlattenSql),
+    Op("ob03_book_asof", bookAsOf, bookAsOfSql),
+    Op("ob04_book_running", bookRunning, bookRunningSql),
+    Op("ob05_best_bid", bestBid, bestBidSql),
+    Op("ob06_spread_mid", spreadMid, spreadMidSql),
+    Op("ob07_depth", depth, depthSql),
+    Op("ob08_ohlc_daily", ohlcDaily, ohlcDailySql),
+    Op("ob09_seq_gaps", seqGaps, seqGapsSql),
+    Op("ob10_msg_rate", msgRate, msgRateSql),
+    Op("ob11_latency", latency, latencySql),
+    Op("ob12_dedup_replay", dedupReplay, dedupReplaySql),
+    Op("ob13_dup_audit", dupAudit, dupAuditSql),
+    Op("ob14_asof_price", asofPrice, asofPriceSql),
+    Op("ob19_asof_tolerance", asofTolerance, asofToleranceSql),
+    Op("ob15_vwap", vwap, vwapSql),
+    Op("ob16_flow_imbalance", flowImbalance, flowImbalanceSql),
+    Op("ob17_microprice", microprice, micropriceSql),
+    Op("ob18_realized_var", realizedVariance, realizedVarianceSql),
+    Op("ob20_twap", twap, twapSql),
+    Op("ob21_price_impact", priceImpact, priceImpactSql),
+    Op("ob22_return_autocorr", returnAutocorr, returnAutocorrSql),
+    Op("ob23_eff_spread", effectiveSpread, effectiveSpreadSql),
+    Op("ob24_amihud", amihud, amihudSql),
+    Op("ob25_roll_spread", rollSpread, rollSpreadSql),
+    Op("ob26_candle_resample", candleResample, candleResampleSql),
+    Op("ob27_variance_ratio", varianceRatio, varianceRatioSql),
+    Op("ob28_vpin", vpin, vpinSql),
+    Op("ob29_asof_native", asofNative, asofPriceSql),
+    Op("ob30_asof_native_strict", asofNativeStrict, asofToleranceSql),
+    Op("ob31_book_conservation", bookConservation, bookConservationSql),
+    Op("ob32_flow_predictability", flowPredictability, flowPredictabilitySql),
+    Op("ob33_weighted_imbalance", weightedImbalance, weightedImbalanceSql),
+    Op("ob34_asof_composite", asofComposite, asofCompositeSql),
+    Op("ob35_lee_ready", leeReady, leeReadySql),
+    Op("ob36_asof_sql", asofSqlTvf, asofPriceSql))
 }

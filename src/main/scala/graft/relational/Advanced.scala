@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, TimestampType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Round-5 relational additions: the classic TPC-H subquery shapes the
   * q01–q31 set didn't cover (Q21 double-correlated EXISTS / NOT EXISTS,
@@ -1968,91 +1968,47 @@ object Advanced {
       |FROM u LEFT JOIN k2 USING (user_id) LEFT JOIN k3 USING (user_id)
       |ORDER BY u.user_id""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q32_waiting_supplier" -> (q32WaitingSupplier _),
-    "q33_top_supplier" -> (q33TopSupplier _),
-    "q34_grouping_sets" -> (q34GroupingSets _),
-    "q35_ntile_quartiles" -> (q35NtileQuartiles _),
-    "q36_percentiles" -> (q36Percentiles _),
-    "q37_range_frames" -> (q37RangeFrames _),
-    "q38_part_supplier_counts" -> (q38PartSupplierCounts _),
-    "q39_excess_share" -> (q39ExcessShare _),
-    "q40_hierarchy_walk" -> (q40HierarchyWalk _),
-    "q41_gap_fill" -> (q41GapFill _),
-    "q42_json_extract" -> (q42JsonExtract _),
-    "q43_set_ops_all" -> (q43SetOpsAll _),
-    "q44_unpivot" -> (q44Unpivot _),
-    "q45_nullsafe_join" -> (q45NullSafeJoin _),
-    "q46_profile" -> (q46Profile _),
-    "q47_interpolate" -> (q47Interpolate _),
-    "q48_mad_outliers" -> (q48MadOutliers _),
-    "q49_schema_evolution" -> (q49SchemaEvolution _),
-    "q50_histogram" -> (q50Histogram _),
-    "q51_notin_null" -> (q51NotInNull _),
-    "q52_lateral" -> (q52Lateral _),
-    "q53_array_hof" -> (q53ArrayHof _),
-    "q54_markov_chain" -> (q54MarkovChain _),
-    "q55_variant_shred" -> (q55VariantShred _),
-    "q56_top_per_group" -> (q56TopPerGroup _),
-    "q57_pivot" -> (q57Pivot _),
-    "q58_date_spine" -> (q58DateSpine _),
-    "q59_string_funcs" -> (q59StringFuncs _),
-    "q60_map_hof" -> (q60MapHof _),
-    "q61_interval_frames" -> (q61IntervalFrames _),
-    "q62_generate_outer" -> (q62GenerateOuter _),
-    "q63_bitmap_distinct" -> (q63BitmapDistinct _),
-    "q64_listagg" -> (q64Listagg _),
-    "q65_percentile_disc" -> (q65PercentileDisc _),
-    "q66_hint_join" -> (q66HintJoin _),
-    "q67_k_anonymity" -> (q67KAnonymity _),
-    "q70_skyline" -> (q70Skyline _),
-    "q71_pattern_runs" -> (q71PatternRuns _),
-    "q72_seasonal_decompose" -> (q72SeasonalDecompose _),
-    "q73_funnel" -> (q73Funnel _),
-    "q74_cohort_retention" -> (q74CohortRetention _),
-    "q75_bitemporal" -> (q75Bitemporal _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q32_waiting_supplier" -> q32Sql,
-    "q33_top_supplier" -> q33Sql,
-    "q34_grouping_sets" -> q34Sql,
-    "q35_ntile_quartiles" -> q35Sql,
-    "q36_percentiles" -> q36Sql,
-    "q37_range_frames" -> q37Sql,
-    "q38_part_supplier_counts" -> q38Sql,
-    "q39_excess_share" -> q39Sql,
-    "q40_hierarchy_walk" -> q40Sql,
-    "q41_gap_fill" -> q41Sql,
-    "q42_json_extract" -> q42Sql,
-    "q43_set_ops_all" -> q43Sql,
-    "q44_unpivot" -> q44Sql,
-    "q45_nullsafe_join" -> q45Sql,
-    "q46_profile" -> q46Sql,
-    "q47_interpolate" -> q47Sql,
-    "q48_mad_outliers" -> q48Sql,
-    "q49_schema_evolution" -> q49Sql,
-    "q50_histogram" -> q50Sql,
-    "q51_notin_null" -> q51Sql,
-    "q52_lateral" -> q52Sql,
-    "q53_array_hof" -> q53Sql,
-    "q54_markov_chain" -> q54Sql,
-    "q55_variant_shred" -> q55Sql,
-    "q56_top_per_group" -> q56Sql,
-    "q57_pivot" -> q57Sql,
-    "q58_date_spine" -> q58Sql,
-    "q59_string_funcs" -> q59Sql,
-    "q60_map_hof" -> q60Sql,
-    "q61_interval_frames" -> q61Sql,
-    "q62_generate_outer" -> q62Sql,
-    "q63_bitmap_distinct" -> q63Sql,
-    "q64_listagg" -> q64Sql,
-    "q65_percentile_disc" -> q65Sql,
-    "q66_hint_join" -> q66Sql,
-    "q67_k_anonymity" -> q67Sql,
-    "q70_skyline" -> q70Sql,
-    "q71_pattern_runs" -> q71Sql,
-    "q72_seasonal_decompose" -> q72Sql,
-    "q73_funnel" -> q73Sql,
-    "q74_cohort_retention" -> q74Sql,
-    "q75_bitemporal" -> q75Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q32_waiting_supplier", q32WaitingSupplier, q32Sql),
+    Op("q33_top_supplier", q33TopSupplier, q33Sql),
+    Op("q34_grouping_sets", q34GroupingSets, q34Sql),
+    Op("q35_ntile_quartiles", q35NtileQuartiles, q35Sql),
+    Op("q36_percentiles", q36Percentiles, q36Sql),
+    Op("q37_range_frames", q37RangeFrames, q37Sql),
+    Op("q38_part_supplier_counts", q38PartSupplierCounts, q38Sql),
+    Op("q39_excess_share", q39ExcessShare, q39Sql),
+    Op("q40_hierarchy_walk", q40HierarchyWalk, q40Sql),
+    Op("q41_gap_fill", q41GapFill, q41Sql),
+    Op("q42_json_extract", q42JsonExtract, q42Sql),
+    Op("q43_set_ops_all", q43SetOpsAll, q43Sql),
+    Op("q44_unpivot", q44Unpivot, q44Sql),
+    Op("q45_nullsafe_join", q45NullSafeJoin, q45Sql),
+    Op("q46_profile", q46Profile, q46Sql),
+    Op("q47_interpolate", q47Interpolate, q47Sql),
+    Op("q48_mad_outliers", q48MadOutliers, q48Sql),
+    Op("q49_schema_evolution", q49SchemaEvolution, q49Sql),
+    Op("q50_histogram", q50Histogram, q50Sql),
+    Op("q51_notin_null", q51NotInNull, q51Sql),
+    Op("q52_lateral", q52Lateral, q52Sql),
+    Op("q53_array_hof", q53ArrayHof, q53Sql),
+    Op("q54_markov_chain", q54MarkovChain, q54Sql),
+    Op("q55_variant_shred", q55VariantShred, q55Sql),
+    Op("q56_top_per_group", q56TopPerGroup, q56Sql),
+    Op("q57_pivot", q57Pivot, q57Sql),
+    Op("q58_date_spine", q58DateSpine, q58Sql),
+    Op("q59_string_funcs", q59StringFuncs, q59Sql),
+    Op("q60_map_hof", q60MapHof, q60Sql),
+    Op("q61_interval_frames", q61IntervalFrames, q61Sql),
+    Op("q62_generate_outer", q62GenerateOuter, q62Sql),
+    Op("q63_bitmap_distinct", q63BitmapDistinct, q63Sql),
+    Op("q64_listagg", q64Listagg, q64Sql),
+    Op("q65_percentile_disc", q65PercentileDisc, q65Sql),
+    Op("q66_hint_join", q66HintJoin, q66Sql),
+    Op("q67_k_anonymity", q67KAnonymity, q67Sql),
+    Op("q70_skyline", q70Skyline, q70Sql),
+    Op("q71_pattern_runs", q71PatternRuns, q71Sql),
+    Op("q72_seasonal_decompose", q72SeasonalDecompose, q72Sql),
+    Op("q73_funnel", q73Funnel, q73Sql),
+    Op("q74_cohort_retention", q74CohortRetention, q74Sql),
+    Op("q75_bitemporal", q75Bitemporal, q75Sql))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Warehouse-maintenance operators: the two batch mutations every
   * training-data / analytics pipeline ships around its fact tables —
@@ -394,17 +394,10 @@ object Maintenance {
       |FROM d GROUP BY change_type
       |ORDER BY change_type""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q29_merge_upsert" -> (q29MergeUpsert _),
-    "q30_scd2_history" -> (q30Scd2History _),
-    "q31_incremental_agg" -> (q31IncrementalAgg _),
-    "q68_dq_audit" -> (q68DqAudit _),
-    "q69_snapshot_diff" -> (q69SnapshotDiff _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q29_merge_upsert" -> q29Sql,
-    "q30_scd2_history" -> q30Sql,
-    "q31_incremental_agg" -> q31Sql,
-    "q68_dq_audit" -> q68Sql,
-    "q69_snapshot_diff" -> q69Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q29_merge_upsert", q29MergeUpsert, q29Sql),
+    Op("q30_scd2_history", q30Scd2History, q30Sql),
+    Op("q31_incremental_agg", q31IncrementalAgg, q31Sql),
+    Op("q68_dq_audit", q68DqAudit, q68Sql),
+    Op("q69_snapshot_diff", q69SnapshotDiff, q69Sql))
 }

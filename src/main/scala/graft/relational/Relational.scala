@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Relational query surface: aggregation, joins (broadcast / shuffle /
   * semi / anti), window functions, rollup, set operations, scalar
@@ -920,59 +920,31 @@ object Relational {
   }
 
   // ----------------------------------------------------------- registry
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q03_shipping_priority" -> (q03ShippingPriority _),
-    "q05_local_supplier" -> (q05LocalSupplier _),
-    "q06_forecast_revenue" -> (q06ForecastRevenue _),
-    "q07_semi_anti" -> (q07SemiAnti _),
-    "q08_market_share" -> (q08MarketShare _),
-    "q09_window_topk" -> (q09WindowTopK _),
-    "q10_running_sum" -> (q10RunningSum _),
-    "q11_rollup" -> (q11Rollup _),
-    "q12_setops" -> (q12SetOps _),
-    "q13_scalar_funcs" -> (q13ScalarFuncs _),
-    "q14_date_funcs" -> (q14DateFuncs _),
-    "q15_events_tumbling" -> (q15EventsTumbling _),
-    "q16_sessionize" -> (q16Sessionize _),
-    "q17_distinct_agg" -> (q17DistinctAgg _),
-    "q18_cube" -> (q18Cube _),
-    "q19_pivot" -> (q19Pivot _),
-    "q20_scalar_subquery" -> (q20ScalarSubquery _),
-    "q21_sliding" -> (q21Sliding _),
-    "q22_sales_opportunity" -> (q22SalesOpportunity _),
-    "q23_nation_coverage" -> (q23NationCoverage _),
-    "q24_late_orders" -> (q24LateOrders _),
-    "q25_cust_distribution" -> (q25CustDistribution _),
-    "q26_funnel" -> (q26Funnel _),
-    "q27_min_cost_supplier" -> (q27MinCostSupplier _),
-    "q28_range_join" -> (q28RangeJoin _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "q01_pricing_summary" -> q01Sql,
-    "q03_shipping_priority" -> q03Sql,
-    "q05_local_supplier" -> q05Sql,
-    "q06_forecast_revenue" -> q06Sql,
-    "q07_semi_anti" -> q07Sql,
-    "q08_market_share" -> q08Sql,
-    "q09_window_topk" -> q09Sql,
-    "q10_running_sum" -> q10Sql,
-    "q11_rollup" -> q11Sql,
-    "q12_setops" -> q12Sql,
-    "q13_scalar_funcs" -> q13Sql,
-    "q14_date_funcs" -> q14Sql,
-    "q15_events_tumbling" -> q15Sql,
-    "q16_sessionize" -> q16Sql,
-    "q17_distinct_agg" -> q17Sql,
-    "q18_cube" -> q18Sql,
-    "q19_pivot" -> q19Sql,
-    "q20_scalar_subquery" -> q20Sql,
-    "q21_sliding" -> q21Sql,
-    "q22_sales_opportunity" -> q22Sql,
-    "q23_nation_coverage" -> q23Sql,
-    "q24_late_orders" -> q24Sql,
-    "q25_cust_distribution" -> q25Sql,
-    "q26_funnel" -> q26Sql,
-    "q27_min_cost_supplier" -> q27Sql,
-    "q28_range_join" -> q28Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Op("q03_shipping_priority", q03ShippingPriority, q03Sql),
+    Op("q05_local_supplier", q05LocalSupplier, q05Sql),
+    Op("q06_forecast_revenue", q06ForecastRevenue, q06Sql),
+    Op("q07_semi_anti", q07SemiAnti, q07Sql),
+    Op("q08_market_share", q08MarketShare, q08Sql),
+    Op("q09_window_topk", q09WindowTopK, q09Sql),
+    Op("q10_running_sum", q10RunningSum, q10Sql),
+    Op("q11_rollup", q11Rollup, q11Sql),
+    Op("q12_setops", q12SetOps, q12Sql),
+    Op("q13_scalar_funcs", q13ScalarFuncs, q13Sql),
+    Op("q14_date_funcs", q14DateFuncs, q14Sql),
+    Op("q15_events_tumbling", q15EventsTumbling, q15Sql),
+    Op("q16_sessionize", q16Sessionize, q16Sql),
+    Op("q17_distinct_agg", q17DistinctAgg, q17Sql),
+    Op("q18_cube", q18Cube, q18Sql),
+    Op("q19_pivot", q19Pivot, q19Sql),
+    Op("q20_scalar_subquery", q20ScalarSubquery, q20Sql),
+    Op("q21_sliding", q21Sliding, q21Sql),
+    Op("q22_sales_opportunity", q22SalesOpportunity, q22Sql),
+    Op("q23_nation_coverage", q23NationCoverage, q23Sql),
+    Op("q24_late_orders", q24LateOrders, q24Sql),
+    Op("q25_cust_distribution", q25CustDistribution, q25Sql),
+    Op("q26_funnel", q26Funnel, q26Sql),
+    Op("q27_min_cost_supplier", q27MinCostSupplier, q27Sql),
+    Op("q28_range_join", q28RangeJoin, q28Sql))
 }

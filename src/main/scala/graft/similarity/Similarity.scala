@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Similarity search over the embeddings table: brute-force cosine top-k
   * (the correctness baseline) and an LSH-bucketed ANN variant (the scale
@@ -3773,85 +3773,44 @@ object Similarity {
       |WHERE rnk <= 3
       |ORDER BY query_id, rnk""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "sim01_cosine_topk" -> (cosineTopK _),
-    "sim02_lsh_ann" -> (lshAnn _),
-    "sim03_ivf_ann" -> (ivfAnn _),
-    "sim04_ivf_multiprobe" -> (ivfMultiProbe _),
-    "sim05_sq8_topk" -> (sq8TopK _),
-    "sim06_sq8_rerank" -> (sq8Rerank _),
-    "sim07_pq_adc" -> (pqAdc _),
-    "sim08_knn_graph" -> (knnGraph _),
-    "sim09_semdedup" -> (semDedup _),
-    "sim10_kmeans_step" -> (kmeansStep _),
-    "sim11_maxsim" -> (maxSim _),
-    "sim12_filtered_ann" -> (filteredAnn _),
-    "sim13_knn_vote" -> (knnVote _),
-    "sim14_ann_recall" -> (annRecall _),
-    "sim15_rank_metrics" -> (rankMetrics _),
-    "sim16_range_search" -> (rangeSearch _),
-    "sim17_hard_negatives" -> (hardNegatives _),
-    "sim18_pq_error" -> (pqError _),
-    "sim19_embed_decontaminate" -> (embedDecontaminate _),
-    "sim20_cell_balance" -> (cellBalance _),
-    "sim21_ivfpq" -> (ivfPq _),
-    "sim22_graph_ann" -> (graphAnn _),
-    "sim23_binary_hamming" -> (binaryHamming _),
-    "sim24_kmeans_lloyd" -> (kmeansLloyd _),
-    "sim25_pagerank" -> (pageRank _),
-    "sim26_power_iteration" -> (powerIteration _),
-    "sim27_matryoshka_recall" -> (matryoshkaRecall _),
-    "sim28_rrf_fusion" -> (rrfFusion _),
-    "sim29_knn_multiprobe" -> (knnGraphMulti _),
-    "sim30_knn_trained" -> (knnTrained _),
-    "sim31_graph_recall" -> (graphRecall _),
-    "sim32_consumed_recall" -> (consumedRecall _),
-    "sim33_ivfpq_residual" -> (ivfPqResidual _),
-    "sim34_ivf_append" -> (ivfAppend _),
-    "sim35_ivf_retrain" -> (ivfPartialRetrain _),
-    "sim36_ivf_store" -> (ivfStoreCensus _),
-    "sim37_retrain_reassign" -> (ivfRetrainReassign _),
-    "sim38_cell_resolution" -> (cellResolution _),
-    "sim39_store_drift" -> (ivfStoreDrift _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "sim01_cosine_topk" -> cosineTopKSql,
-    "sim02_lsh_ann" -> lshAnnSql,
-    "sim03_ivf_ann" -> ivfAnnSql,
-    "sim04_ivf_multiprobe" -> ivfMultiProbeSql,
-    "sim05_sq8_topk" -> sq8TopKSql,
-    "sim06_sq8_rerank" -> sq8RerankSql,
-    "sim07_pq_adc" -> pqAdcSql,
-    "sim08_knn_graph" -> knnGraphSql,
-    "sim09_semdedup" -> semDedupSql,
-    "sim10_kmeans_step" -> kmeansStepSql,
-    "sim11_maxsim" -> maxSimSql,
-    "sim12_filtered_ann" -> filteredAnnSql,
-    "sim13_knn_vote" -> knnVoteSql,
-    "sim14_ann_recall" -> annRecallSql,
-    "sim15_rank_metrics" -> rankMetricsSql,
-    "sim16_range_search" -> rangeSearchSql,
-    "sim17_hard_negatives" -> hardNegativesSql,
-    "sim18_pq_error" -> pqErrorSql,
-    "sim19_embed_decontaminate" -> embedDecontaminateSql,
-    "sim20_cell_balance" -> cellBalanceSql,
-    "sim21_ivfpq" -> ivfPqSql,
-    "sim22_graph_ann" -> graphAnnSql,
-    "sim23_binary_hamming" -> binaryHammingSql,
-    "sim24_kmeans_lloyd" -> kmeansLloydSql,
-    "sim25_pagerank" -> pageRankSql,
-    "sim26_power_iteration" -> powerIterationSql,
-    "sim27_matryoshka_recall" -> matryoshkaRecallSql,
-    "sim28_rrf_fusion" -> rrfFusionSql,
-    "sim29_knn_multiprobe" -> knnGraphMultiSql,
-    "sim30_knn_trained" -> knnTrainedSql,
-    "sim31_graph_recall" -> graphRecallSql,
-    "sim32_consumed_recall" -> consumedRecallSql,
-    "sim33_ivfpq_residual" -> ivfPqResidualSql,
-    "sim34_ivf_append" -> ivfAppendSql,
-    "sim35_ivf_retrain" -> ivfPartialRetrainSql,
-    "sim36_ivf_store" -> ivfStoreCensusSql,
-    "sim37_retrain_reassign" -> ivfRetrainReassignSql,
-    "sim38_cell_resolution" -> cellResolutionSql,
-    "sim39_store_drift" -> ivfStoreDriftSql)
+  val ops: Seq[Op] = Seq(
+    Op("sim01_cosine_topk", cosineTopK, cosineTopKSql),
+    Op("sim02_lsh_ann", lshAnn, lshAnnSql),
+    Op("sim03_ivf_ann", ivfAnn, ivfAnnSql),
+    Op("sim04_ivf_multiprobe", ivfMultiProbe, ivfMultiProbeSql),
+    Op("sim05_sq8_topk", sq8TopK, sq8TopKSql),
+    Op("sim06_sq8_rerank", sq8Rerank, sq8RerankSql),
+    Op("sim07_pq_adc", pqAdc, pqAdcSql),
+    Op("sim08_knn_graph", knnGraph, knnGraphSql),
+    Op("sim09_semdedup", semDedup, semDedupSql),
+    Op("sim10_kmeans_step", kmeansStep, kmeansStepSql),
+    Op("sim11_maxsim", maxSim, maxSimSql),
+    Op("sim12_filtered_ann", filteredAnn, filteredAnnSql),
+    Op("sim13_knn_vote", knnVote, knnVoteSql),
+    Op("sim14_ann_recall", annRecall, annRecallSql),
+    Op("sim15_rank_metrics", rankMetrics, rankMetricsSql),
+    Op("sim16_range_search", rangeSearch, rangeSearchSql),
+    Op("sim17_hard_negatives", hardNegatives, hardNegativesSql),
+    Op("sim18_pq_error", pqError, pqErrorSql),
+    Op("sim19_embed_decontaminate", embedDecontaminate, embedDecontaminateSql),
+    Op("sim20_cell_balance", cellBalance, cellBalanceSql),
+    Op("sim21_ivfpq", ivfPq, ivfPqSql),
+    Op("sim22_graph_ann", graphAnn, graphAnnSql),
+    Op("sim23_binary_hamming", binaryHamming, binaryHammingSql),
+    Op("sim24_kmeans_lloyd", kmeansLloyd, kmeansLloydSql),
+    Op("sim25_pagerank", pageRank, pageRankSql),
+    Op("sim26_power_iteration", powerIteration, powerIterationSql),
+    Op("sim27_matryoshka_recall", matryoshkaRecall, matryoshkaRecallSql),
+    Op("sim28_rrf_fusion", rrfFusion, rrfFusionSql),
+    Op("sim29_knn_multiprobe", knnGraphMulti, knnGraphMultiSql),
+    Op("sim30_knn_trained", knnTrained, knnTrainedSql),
+    Op("sim31_graph_recall", graphRecall, graphRecallSql),
+    Op("sim32_consumed_recall", consumedRecall, consumedRecallSql),
+    Op("sim33_ivfpq_residual", ivfPqResidual, ivfPqResidualSql),
+    Op("sim34_ivf_append", ivfAppend, ivfAppendSql),
+    Op("sim35_ivf_retrain", ivfPartialRetrain, ivfPartialRetrainSql),
+    Op("sim36_ivf_store", ivfStoreCensus, ivfStoreCensusSql),
+    Op("sim37_retrain_reassign", ivfRetrainReassign, ivfRetrainReassignSql),
+    Op("sim38_cell_resolution", cellResolution, cellResolutionSql),
+    Op("sim39_store_drift", ivfStoreDrift, ivfStoreDriftSql))
 }

@@ -116,6 +116,14 @@ object StreamPipeline {
           col("msg.price_dollars").cast(Schemas.price).as("price_dollars"),
           col("msg.delta").as("delta")))
 
+  /** The two fact tables of one decoded batch, (snapshots, deltas):
+    * A4 routing, then the A15 in-batch replay dedup on each table's key.
+    * [[runUnifiedFrom]] and `Ingest.consumer` both sink these. */
+  def facts(batch: DataFrame): (DataFrame, DataFrame) =
+    (Normalize.dedupReplays(routeSnapshots(batch),
+        Seq("redis_stream_id", "side", "price_dollars")),
+      Normalize.dedupReplays(routeDeltas(batch), Seq("redis_stream_id")))
+
   /** A15 across micro-batches: the in-batch dedup in [[runUnified]]
     * covers the file source's exactly-once offsets, but an
     * at-least-once transport (socket reconnect, Redis re-delivery)
@@ -297,11 +305,9 @@ object StreamPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
         try {
-          Normalize.dedupReplays(routeSnapshots(batch),
-              Seq("redis_stream_id", "side", "price_dollars"))
-            .write.mode("append").parquet(s"$outDir/orderbook_snapshots")
-          Normalize.dedupReplays(routeDeltas(batch), Seq("redis_stream_id"))
-            .write.mode("append").parquet(s"$outDir/orderbook_deltas")
+          val (snapshots, deltas) = facts(batch)
+          snapshots.write.mode("append").parquet(s"$outDir/orderbook_snapshots")
+          deltas.write.mode("append").parquet(s"$outDir/orderbook_deltas")
         } finally batch.unpersist()
       }
       .start()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
+import graft.Op
 import graft.orderbook.Derive
 
 /** Registry entries whose Spark side RUNS THROUGH THE STREAMING CODE
@@ -1501,47 +1502,31 @@ object StreamedQueries {
       |HAVING COUNT(*) * 200 > (SELECT n_total FROM tot)
       |ORDER BY cnt DESC, token""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "st01_stream_ivf" -> (streamIvf _),
-    "st02_stream_kmv" -> (streamKmv _),
-    "st03_stream_sessions" -> (streamSessions _),
-    "st04_stream_candles" -> (streamCandles _),
-    "st05_stream_asof" -> (streamAsOf _),
-    "st06_stream_book" -> (streamBook _),
-    "st07_stream_rate" -> (streamRate _),
-    "st08_stream_pairs" -> (streamPairs _),
-    "st09_stream_unmatched" -> (streamUnmatched _),
-    "st10_stream_enrich" -> (streamEnrich _),
-    "st11_stream_dedup" -> (streamDedup _),
-    "st12_stream_tickerstats" -> (streamTickerStats _),
-    "st13_stream_wire" -> (streamWire _),
-    "st14_stream_reconnect" -> (streamReconnect _),
-    "st15_stream_queue" -> (streamQueue _),
-    "st16_stream_topk" -> (streamTopTickers _),
-    "st17_stream_neardup" -> (streamNearDup _),
-    "st18_stream_heavy" -> (streamHeavy _),
-    "st19_stream_curation" -> (streamCuration _),
-    "st20_stream_emit" -> (streamEmitCensus _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "st01_stream_ivf" -> streamIvfSql,
-    "st02_stream_kmv" -> streamKmvSql,
-    "st03_stream_sessions" -> streamSessionsSql,
-    "st04_stream_candles" -> streamCandlesSql,
-    "st05_stream_asof" -> streamAsOfSql,
-    "st06_stream_book" -> streamBookSql,
-    "st07_stream_rate" -> streamRateSql,
-    "st08_stream_pairs" -> streamPairsSql,
-    "st09_stream_unmatched" -> streamUnmatchedSql,
-    "st10_stream_enrich" -> streamEnrichSql,
-    "st11_stream_dedup" -> streamDedupSql,
-    "st12_stream_tickerstats" -> streamTickerStatsSql,
-    "st13_stream_wire" -> streamWireSql,
-    "st14_stream_reconnect" -> streamWireSql,
-    "st15_stream_queue" -> streamWireSql,
-    "st16_stream_topk" -> streamTopTickersSql,
-    "st17_stream_neardup" -> streamNearDupSql,
-    "st18_stream_heavy" -> streamHeavySql,
-    "st19_stream_curation" -> streamCurationSql,
-    "st20_stream_emit" -> streamEmitCensusSql)
+  val ops: Seq[Op] = Seq(
+    Op("st01_stream_ivf", streamIvf, streamIvfSql, Set(Op.Stream)),
+    Op("st02_stream_kmv", streamKmv, streamKmvSql, Set(Op.Stream)),
+    Op("st03_stream_sessions", streamSessions, streamSessionsSql,
+      Set(Op.Stream)),
+    Op("st04_stream_candles", streamCandles, streamCandlesSql, Set(Op.Stream)),
+    Op("st05_stream_asof", streamAsOf, streamAsOfSql, Set(Op.Stream)),
+    Op("st06_stream_book", streamBook, streamBookSql, Set(Op.Stream)),
+    Op("st07_stream_rate", streamRate, streamRateSql, Set(Op.Stream)),
+    Op("st08_stream_pairs", streamPairs, streamPairsSql, Set(Op.Stream)),
+    Op("st09_stream_unmatched", streamUnmatched, streamUnmatchedSql,
+      Set(Op.Stream)),
+    Op("st10_stream_enrich", streamEnrich, streamEnrichSql, Set(Op.Stream)),
+    Op("st11_stream_dedup", streamDedup, streamDedupSql, Set(Op.Stream)),
+    Op("st12_stream_tickerstats", streamTickerStats, streamTickerStatsSql,
+      Set(Op.Stream)),
+    Op("st13_stream_wire", streamWire, streamWireSql, Set(Op.Stream)),
+    Op("st14_stream_reconnect", streamReconnect, streamWireSql, Set(Op.Stream)),
+    Op("st15_stream_queue", streamQueue, streamWireSql, Set(Op.Stream)),
+    Op("st16_stream_topk", streamTopTickers, streamTopTickersSql,
+      Set(Op.Stream)),
+    Op("st17_stream_neardup", streamNearDup, streamNearDupSql, Set(Op.Stream)),
+    Op("st18_stream_heavy", streamHeavy, streamHeavySql, Set(Op.Stream)),
+    Op("st19_stream_curation", streamCuration, streamCurationSql,
+      Set(Op.Stream)),
+    Op("st20_stream_emit", streamEmitCensus, streamEmitCensusSql,
+      Set(Op.Stream)))
 }

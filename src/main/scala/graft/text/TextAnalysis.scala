@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Text-analysis operators for an LLM training-data pipeline, over the
   * `documents` table: token statistics, language-ID scoring, quality
@@ -3461,101 +3461,52 @@ object TextAnalysis {
       |LEFT JOIN agc c ON c.query_id = a.query_id
       |ORDER BY a.query_id""".stripMargin
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "txt01_token_stats" -> (tokenStats _),
-    "txt02_langid" -> (langId _),
-    "txt03_quality" -> (qualityScore _),
-    "txt04_fingerprint" -> (fingerprint _),
-    "txt05_ngram_profile" -> (ngramProfile _),
-    "txt06_countmin" -> (countMinSketch _),
-    "txt07_tfidf" -> (tfidfTerms _),
-    "txt08_curation" -> (curation _),
-    "txt09_split_assign" -> (splitAssign _),
-    "txt10_seq_pack" -> (seqPack _),
-    "txt11_repetition" -> (repetition _),
-    "txt12_stratified_sample" -> (stratifiedSample _),
-    "txt13_chunk_overlap" -> (chunkOverlap _),
-    "txt14_pii_scrub" -> (piiScrub _),
-    "txt15_kmv_distinct" -> (kmvDistinct _),
-    "txt16_quality_model" -> (qualityModel _),
-    "txt17_mixture_reweight" -> (mixtureReweight _),
-    "txt18_heavy_hitters" -> (heavyHitters _),
-    "txt19_curriculum_order" -> (curriculumOrder _),
-    "txt20_novelty" -> (noveltyScore _),
-    "txt21_zipf_slope" -> (zipfSlope _),
-    "txt22_entropy" -> (tokenEntropy _),
-    "txt23_source_mix" -> (sourceMix _),
-    "txt24_split_leakage" -> (splitLeakage _),
-    "txt25_unigram_nll" -> (unigramNll _),
-    "txt26_boilerplate_strip" -> (boilerplateStrip _),
-    "txt27_token_fertility" -> (tokenFertility _),
-    "txt28_bigram_nll" -> (bigramNll _),
-    "txt29_bpe_pretokens" -> (bpePretokens _),
-    "txt30_source_drift" -> (sourceDrift _),
-    "txt31_heaps_fit" -> (heapsFit _),
-    "txt32_kmv_overlap" -> (kmvOverlap _),
-    "txt33_temperature_mix" -> (temperatureMix _),
-    "txt34_linear_probe" -> (linearProbeGd _),
-    "txt35_vocab_coverage" -> (vocabCoverage _),
-    "txt36_bpe_merge_stats" -> (bpeMergeStats _),
-    "txt46_bpe_train" -> (bpeTrainedMerges _),
-    "txt47_bpe_compression" -> (bpeCompressionCurve _),
-    "txt37_repetition" -> (repetitionFilter _),
-    "txt38_logistic_quality" -> (logisticQualityGd _),
-    "txt39_dsir_select" -> (dsirSelect _),
-    "txt40_calibration" -> (calibrationAudit _),
-    "txt41_doremi_mw" -> (doremiMw _),
-    "txt42_pmi_collocations" -> (pmiCollocations _),
-    "txt43_bm25" -> (bm25Retrieval _),
-    "txt44_query_likelihood" -> (queryLikelihood _),
-    "txt45_ranker_agreement" -> (rankerAgreement _))
-
-  val oracles: Seq[(String, String)] = Seq(
-    "txt01_token_stats" -> tokenStatsSql,
-    "txt02_langid" -> langIdSql,
-    "txt03_quality" -> qualityScoreSql,
-    "txt04_fingerprint" -> fingerprintSql,
-    "txt05_ngram_profile" -> ngramProfileSql,
-    "txt06_countmin" -> countMinSketchSql,
-    "txt07_tfidf" -> tfidfTermsSql,
-    "txt08_curation" -> curationSql,
-    "txt09_split_assign" -> splitAssignSql,
-    "txt10_seq_pack" -> seqPackSql,
-    "txt11_repetition" -> repetitionSql,
-    "txt12_stratified_sample" -> stratifiedSampleSql,
-    "txt13_chunk_overlap" -> chunkOverlapSql,
-    "txt14_pii_scrub" -> piiScrubSql,
-    "txt15_kmv_distinct" -> kmvDistinctSql,
-    "txt16_quality_model" -> qualityModelSql,
-    "txt17_mixture_reweight" -> mixtureReweightSql,
-    "txt18_heavy_hitters" -> heavyHittersSql,
-    "txt19_curriculum_order" -> curriculumOrderSql,
-    "txt20_novelty" -> noveltyScoreSql,
-    "txt21_zipf_slope" -> zipfSlopeSql,
-    "txt22_entropy" -> tokenEntropySql,
-    "txt23_source_mix" -> sourceMixSql,
-    "txt24_split_leakage" -> splitLeakageSql,
-    "txt25_unigram_nll" -> unigramNllSql,
-    "txt26_boilerplate_strip" -> boilerplateStripSql,
-    "txt27_token_fertility" -> tokenFertilitySql,
-    "txt28_bigram_nll" -> bigramNllSql,
-    "txt29_bpe_pretokens" -> bpePretokensSql,
-    "txt30_source_drift" -> sourceDriftSql,
-    "txt31_heaps_fit" -> heapsFitSql,
-    "txt32_kmv_overlap" -> kmvOverlapSql,
-    "txt33_temperature_mix" -> temperatureMixSql,
-    "txt34_linear_probe" -> linearProbeGdSql,
-    "txt35_vocab_coverage" -> vocabCoverageSql,
-    "txt36_bpe_merge_stats" -> bpeMergeStatsSql,
-    "txt46_bpe_train" -> bpeTrainedMergesSql,
-    "txt47_bpe_compression" -> bpeCompressionCurveSql,
-    "txt37_repetition" -> repetitionFilterSql,
-    "txt38_logistic_quality" -> logisticQualityGdSql,
-    "txt39_dsir_select" -> dsirSelectSql,
-    "txt40_calibration" -> calibrationAuditSql,
-    "txt41_doremi_mw" -> doremiMwSql,
-    "txt42_pmi_collocations" -> pmiCollocationsSql,
-    "txt43_bm25" -> bm25RetrievalSql,
-    "txt44_query_likelihood" -> queryLikelihoodSql,
-    "txt45_ranker_agreement" -> rankerAgreementSql)
+  val ops: Seq[Op] = Seq(
+    Op("txt01_token_stats", tokenStats, tokenStatsSql),
+    Op("txt02_langid", langId, langIdSql),
+    Op("txt03_quality", qualityScore, qualityScoreSql),
+    Op("txt04_fingerprint", fingerprint, fingerprintSql),
+    Op("txt05_ngram_profile", ngramProfile, ngramProfileSql),
+    Op("txt06_countmin", countMinSketch, countMinSketchSql),
+    Op("txt07_tfidf", tfidfTerms, tfidfTermsSql),
+    Op("txt08_curation", curation, curationSql),
+    Op("txt09_split_assign", splitAssign, splitAssignSql),
+    Op("txt10_seq_pack", seqPack, seqPackSql),
+    Op("txt11_repetition", repetition, repetitionSql),
+    Op("txt12_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Op("txt13_chunk_overlap", chunkOverlap, chunkOverlapSql),
+    Op("txt14_pii_scrub", piiScrub, piiScrubSql),
+    Op("txt15_kmv_distinct", kmvDistinct, kmvDistinctSql),
+    Op("txt16_quality_model", qualityModel, qualityModelSql),
+    Op("txt17_mixture_reweight", mixtureReweight, mixtureReweightSql),
+    Op("txt18_heavy_hitters", heavyHitters, heavyHittersSql),
+    Op("txt19_curriculum_order", curriculumOrder, curriculumOrderSql),
+    Op("txt20_novelty", noveltyScore, noveltyScoreSql),
+    Op("txt21_zipf_slope", zipfSlope, zipfSlopeSql),
+    Op("txt22_entropy", tokenEntropy, tokenEntropySql),
+    Op("txt23_source_mix", sourceMix, sourceMixSql),
+    Op("txt24_split_leakage", splitLeakage, splitLeakageSql),
+    Op("txt25_unigram_nll", unigramNll, unigramNllSql),
+    Op("txt26_boilerplate_strip", boilerplateStrip, boilerplateStripSql),
+    Op("txt27_token_fertility", tokenFertility, tokenFertilitySql),
+    Op("txt28_bigram_nll", bigramNll, bigramNllSql),
+    Op("txt29_bpe_pretokens", bpePretokens, bpePretokensSql),
+    Op("txt30_source_drift", sourceDrift, sourceDriftSql),
+    Op("txt31_heaps_fit", heapsFit, heapsFitSql),
+    Op("txt32_kmv_overlap", kmvOverlap, kmvOverlapSql),
+    Op("txt33_temperature_mix", temperatureMix, temperatureMixSql),
+    Op("txt34_linear_probe", linearProbeGd, linearProbeGdSql),
+    Op("txt35_vocab_coverage", vocabCoverage, vocabCoverageSql),
+    Op("txt36_bpe_merge_stats", bpeMergeStats, bpeMergeStatsSql),
+    Op("txt46_bpe_train", bpeTrainedMerges, bpeTrainedMergesSql),
+    Op("txt47_bpe_compression", bpeCompressionCurve, bpeCompressionCurveSql),
+    Op("txt37_repetition", repetitionFilter, repetitionFilterSql),
+    Op("txt38_logistic_quality", logisticQualityGd, logisticQualityGdSql),
+    Op("txt39_dsir_select", dsirSelect, dsirSelectSql),
+    Op("txt40_calibration", calibrationAudit, calibrationAuditSql),
+    Op("txt41_doremi_mw", doremiMw, doremiMwSql),
+    Op("txt42_pmi_collocations", pmiCollocations, pmiCollocationsSql),
+    Op("txt43_bm25", bm25Retrieval, bm25RetrievalSql),
+    Op("txt44_query_likelihood", queryLikelihood, queryLikelihoodSql),
+    Op("txt45_ranker_agreement", rankerAgreement, rankerAgreementSql))
 }

@@ -13,6 +13,18 @@ class EntrySpec extends AnyFunSuite {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle-only keys: ${o.diff(q)}")
+    // Verify writes oracle_sql.json in this order
+    assert(SparkEntry.oracleSql.keys.toSeq == SparkEntry.queries.keys.toSeq)
+  }
+
+  test("select: empty selects all; otherwise by name prefix") {
+    val stream = SparkEntry.ops.filter(_.tags(Op.Stream))
+    assert(stream.map(_.name.take(4)) === (1 to 20).map(i => f"st$i%02d"))
+    assert(SparkEntry.select(Seq("st")) === stream)
+    assert(SparkEntry.select(Seq("op04")).map(_.name) ===
+      Seq("op04_runtime_filter"))
+    assert(SparkEntry.select(Nil).size === 267)
+    assert(SparkEntry.select(Nil) === SparkEntry.ops)
   }
 
   /** Batch queries whose semantics DuckDB cannot replay as one SQL

@@ -30,8 +30,8 @@ class RocksDbStateSpec extends AnyFunSuite {
 
   test("every replayed st gate emits identical rows under the RocksDB " +
       "state store") {
-    val fns = StreamedQueries.queries.filterNot(q => skip(q._1))
-    fns.foreach { case (name, fn) =>
+    val fns = StreamedQueries.ops.filterNot(q => skip(q.name))
+    fns.foreach { case graft.Op(name, fn, _, _) =>
       spark.conf.unset(StreamedQueries.ProviderOverrideKey)
       val base = fn(spark, sf).collect().map(_.toString).sorted.toSeq
       assert(base.nonEmpty, s"$name returned no rows on the default run")
