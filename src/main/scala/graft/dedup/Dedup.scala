@@ -128,16 +128,10 @@ object Dedup {
     * ([[minhashSigCached]]) and the (tiny) surviving pair set is
     * localCheckpoint'ed ONCE per (session, dir) — the three consumers
     * differ only in projection/presentation, so the candidate join and
-    * exact verify are never paid twice in one run.
-    * [[ngramPairsPlan]] is the same plan left lazy for plan tests. */
+    * exact verify are never paid twice in one run. */
   private def ngramPairs(s: SparkSession, d: String): DataFrame =
     graft.Seams.memo(s, d, "dd-pairs")(
       verifiedPairsOn(minhashSigCached(s, d)).localCheckpoint())
-
-  /** The dd03 plan fully lazy (no persist/checkpoint) — plan-shape
-    * tests inspect this; runtime goes through [[ngramPairs]]. */
-  private[graft] def ngramPairsPlan(s: SparkSession, d: String): DataFrame =
-    verifiedPairsOn(minhashSig(s, d))
 
   /** One (doc_id, sig, band, bkey) row per (doc, band): the 4×8 band
     * fold of the 32-slot signature to ONE long join key. Shared by the
@@ -283,13 +277,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
 
-  /** The dd05 plan fully lazy (no persist/checkpoint) — plan-shape
-    * tests inspect this; runtime goes through [[minhashLsh]]. */
-  private[graft] def minhashLshPlan(s: SparkSession, d: String): DataFrame =
-    verifiedPairsOn(minhashSig(s, d))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-
   private[graft] def minhashSig(s: SparkSession, d: String): DataFrame =
     withHashedShingles(docsAug(s, d))
       .select(col("doc_id"), col("hsh"))
@@ -374,11 +361,6 @@ object Dedup {
     n.unpersist()
     out
   }
-
-  /** The dd06 plan fully lazy (no persist/checkpoint) — plan-shape
-    * tests inspect this; runtime goes through [[embedNearDup]]. */
-  private[graft] def embedNearDupPlan(s: SparkSession, d: String): DataFrame =
-    embedNearDupOn(s, d, embedNormed(s, d))
 
   private def embedNormed(s: SparkSession, d: String): DataFrame = {
     val v = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
@@ -773,14 +755,6 @@ object Dedup {
     finally evalGrams.unpersist()
   }
 
-  /** dd10's frame left lazy (no persist/checkpoint) for plan tests. */
-  private[graft] def decontaminateBloomPlan(s: SparkSession, d: String)
-      : DataFrame = {
-    val (eval_, train) = decontSides(s, d)
-    bloomDecontOn(wordGrams(eval_).select(col("gram")).distinct(),
-      wordGrams(train))
-  }
-
   private def bloomDecontOn(evalGrams: DataFrame,
       trainGrams: DataFrame): DataFrame = {
     val n = evalGrams.count()
@@ -908,22 +882,7 @@ object Dedup {
     * quoting). Pair counts are a hash-agg on (id_a, id_b); sizes join
     * back per-doc. Σ df² per gram ≤ 50·|postings| keeps the join
     * output linear in the index size. */
-  def containmentPairs(s: SparkSession, d: String): DataFrame =
-    containmentOn(s, d, materialize = true)
-
-  /** The dd13 plan fully lazy (no checkpoint) — plan-shape tests
-    * inspect this; runtime goes through [[containmentPairs]]. */
-  private[graft] def containmentPairsPlan(s: SparkSession, d: String)
-      : DataFrame = containmentOn(s, d, materialize = false)
-
-  /** `materialize = true` localCheckpoints the two shared seams — the
-    * distinct (doc_id, gram) postings feed BOTH the df count and the
-    * pruned index, and the pruned index feeds THREE consumers (sizes,
-    * both join sides); left lazy, Spark recomputes the explode+distinct
-    * subtree once per branch (~2× the query's whole wall time). Same
-    * seam pattern as [[embedNearDup]]. */
-  private def containmentOn(s: SparkSession, d: String,
-      materialize: Boolean): DataFrame = {
+  def containmentPairs(s: SparkSession, d: String): DataFrame = {
     val MaxDf = 50
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"))
@@ -934,29 +893,25 @@ object Dedup {
           array_join(slice(tk, lit(4), (size(tk) / 2).cast(
             org.apache.spark.sql.types.IntegerType)), " ").as("text"),
           col("lang")))
-    val gramsRaw = corpus
+    // the postings seam is the query's dominant cost (explode+distinct
+    // over every 3-gram) and feeds both the df count and the pruned
+    // index; durable-materialize it (round-8 verdict) so Verify and
+    // both Bench passes build it at most once per corpus
+    val grams = graft.Seams.durable(s, d, "dd13-grams")(corpus
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .where(size(col("tk")) >= 3)
       .select(col("doc_id"),
         explode(sequence(lit(1), size(col("tk")) - 2)).as("i"), col("tk"))
       .select(col("doc_id"),
         array_join(slice(col("tk"), col("i"), lit(3)), " ").as("gram"))
-      .distinct()
-    // the postings seam is the query's dominant cost (explode+distinct
-    // over every 3-gram); durable-materialize it (round-8 verdict) so
-    // Verify and both Bench passes build it at most once per corpus
-    val grams =
-      if (materialize) graft.Seams.durable(s, d, "dd13-grams")(gramsRaw)
-      else gramsRaw
+      .distinct())
     val dfc = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    val rareRaw = grams
-      .join(dfc.where(col("df") <= MaxDf).select(col("gram")), "gram")
     // the df-pruned inverted index is itself a durable artifact in a
     // curation pipeline (the same index serves containment, quote
-    // detection, and decontamination audits) — second durable seam
-    val rare =
-      if (materialize) graft.Seams.durable(s, d, "dd13-rare")(rareRaw)
-      else rareRaw
+    // detection, and decontamination audits) — second durable seam,
+    // and it feeds three consumers here (sizes, both join sides)
+    val rare = graft.Seams.durable(s, d, "dd13-rare")(grams
+      .join(dfc.where(col("df") <= MaxDf).select(col("gram")), "gram"))
     // attach each doc's rare-gram count to its postings ONCE (one
     // doc_id-keyed shuffle), so the asymmetric size gate
     // (n_a * 2 <= n_b) applies INSIDE the gram self-join, BEFORE the

@@ -267,11 +267,6 @@ object Multimodal {
     finally sigs.unpersist()
   }
 
-  /** The mm05 plan fully lazy (no persist/checkpoint) — plan-shape
-    * tests inspect this; runtime goes through [[phashNearDup]]. */
-  private[graft] def phashNearDupPlan(s: SparkSession, d: String): DataFrame =
-    phashNearDupOn(phashSigs(s, d))
-
   private def phashSigs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val m = media(s, d).select(col("media_id"), col("payload"))

@@ -2,13 +2,15 @@ package graft.orderbook
 
 import org.apache.spark.sql.types._
 
-/** Single source of truth for every order-book schema.
+/** The order-book value types and fact-table schemas.
   *
-  * The reference declares each schema twice — SQL DDL
+  * The reference declares each table schema twice — SQL DDL
   * (postgres_client.py:29-48) and a Polars cast map (consumer.py:87-96,
   * :153-162) — with the wire shape a third, implicit schema-on-read
-  * (redis_client.py:36-47). Here one StructType per shape serves
-  * from_json, the transforms, and the sinks.
+  * (redis_client.py:36-47). Here one StructType per table serves the
+  * transforms and the sinks; the wire shape is
+  * [[graft.streaming.StreamPipeline.wireEnvelope]], the merged
+  * snapshot/delta envelope the decoder parses.
   */
 object Schemas {
 
@@ -21,35 +23,6 @@ object Schemas {
     * pairs, so they parse as doubles and are cast per-element after
     * explode (the reference's Polars cast plays the same role). */
   val ladderWire: ArrayType = ArrayType(ArrayType(DoubleType))
-
-  /** Snapshot message body (kalshi_ws_client.py:134-148 envelope;
-    * redis_client.py:36-47 fields). */
-  val snapshotMsg: StructType = StructType(Seq(
-    StructField("market_ticker", StringType),
-    StructField("market_id", StringType),
-    StructField("yes_dollars", ladderWire),
-    StructField("no_dollars", ladderWire),
-    StructField("yes", ladderWire),
-    StructField("no", ladderWire)))
-
-  /** Delta message body (redis_client.py:73-85). */
-  val deltaMsg: StructType = StructType(Seq(
-    StructField("market_ticker", StringType),
-    StructField("market_id", StringType),
-    StructField("price", IntegerType),
-    StructField("price_dollars", DoubleType),
-    StructField("delta", IntegerType),
-    StructField("side", StringType),
-    StructField("ts", LongType)))
-
-  private def envelope(msg: StructType) = StructType(Seq(
-    StructField("type", StringType),
-    StructField("sid", LongType),
-    StructField("seq", LongType),
-    StructField("msg", msg)))
-
-  val snapshotEnvelope: StructType = envelope(snapshotMsg)
-  val deltaEnvelope: StructType = envelope(deltaMsg)
 
   /** orderbook_snapshots fact table (postgres_client.py:29-37). */
   val snapshotsTable: StructType = StructType(Seq(

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, BoundReference, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
@@ -470,10 +469,4 @@ object AsOf {
       strict: Boolean = false): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.GraftPlanBridge.asofJoin(
       left, right, leftKeys, rightKeys, leftTs, rightTs, strict)
-
-  /** True when `spark` was built with the graft extensions (the
-    * strategy is injected); callers outside GraftSession would
-    * otherwise fail at planning with "no plan for AsOfJoinNode". */
-  def available(spark: SparkSession): Boolean =
-    spark.sessionState.planner.strategies.contains(AsOfJoinStrategy)
 }

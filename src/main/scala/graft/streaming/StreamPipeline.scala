@@ -272,11 +272,6 @@ object StreamPipeline {
         (col("pos") + 1).cast("int").as("rnk"))
   }
 
-  /** A16: the reference's (dead-code) CSV debug sink — header-on-create
-    * append (kalshi_ws_client.py:32-75). */
-  def debugCsvSink(df: DataFrame, path: String): Unit =
-    df.write.mode("append").option("header", "true").csv(path)
-
   /** __main__ equivalent (SURVEY.md §3.1) and the A14/A15 sink: ONE
     * checkpointed streaming query parses each micro-batch once,
     * persists it, and appends both fact tables inside `foreachBatch`

@@ -2616,25 +2616,14 @@ object TextAnalysis {
     * last step — the shipped model txt40 calibrates. */
   private def lgdTrained(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) =
-    graft.Seams.memo(s, d, "lgd-model")(
-      lgdTrain(s, lgdFeat(s, d), checkpointSteps = true))
+    graft.Seams.memo(s, d, "lgd-model")(lgdTrain(s, lgdFeat(s, d)))
 
-  /** The txt38 training plan fully lazy (no checkpoint/cache) — plan-
-    * shape tests inspect this; runtime goes through [[lgdTrained]].
-    * Mirror of [[graft.dedup.Dedup.ngramPairsPlan]]. */
-  private[graft] def lgdTrainPlan(s: SparkSession, d: String): DataFrame = {
-    val (steps, _) = lgdTrain(s, lgdFeat(s, d))
-    steps.reduce(_ union _).orderBy(col("iter"))
-  }
-
-  /** checkpointSteps: checkpoint each step AS IT IS BUILT so the next
-    * step chains on the materialized frame (6 corpus scans total); a
-    * checkpoint pass after the loop would re-run each step's chained
-    * lineage — 21 scans, measured 3.3× — and fully lazy (false) the
-    * union re-derives earlier steps the same way (fine for plan tests,
-    * the per-scan cost is one 1-row-group aggregate). */
-  private def lgdTrain(s: SparkSession, feat: DataFrame,
-      checkpointSteps: Boolean = false): (Seq[DataFrame], DataFrame) = {
+  /** Checkpoints each step AS IT IS BUILT so the next step chains on
+    * the materialized frame (6 corpus scans total); a checkpoint pass
+    * after the loop would re-run each step's chained lineage — 21
+    * scans, measured 3.3×. */
+  private def lgdTrain(s: SparkSession, feat: DataFrame)
+      : (Seq[DataFrame], DataFrame) = {
     val S = 1000000L
     def fdiv(a: String, b: String) = s"(($a) - pmod(($a), $b)) div $b"
     var w = s.range(1).selectExpr("cast(0 as bigint) as a_s",
@@ -2663,7 +2652,7 @@ object TextAnalysis {
           s"b2_s - (${fdiv(fdiv("se2", "n"), "10000")}) as b2_s",
           s"${fdiv("see", "n")} as loss_ppm",
           "ncor as n_correct")
-      steps += (if (checkpointSteps) step.localCheckpoint() else step)
+      steps += step.localCheckpoint()
       w = steps.last.select(col("a_s"), col("b1_s"), col("b2_s"))
     }
     (steps.toSeq, w)

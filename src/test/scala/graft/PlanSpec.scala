@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests: correctness of the ROW SET is the
@@ -13,6 +20,43 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Every SQL execution one registered query runs, in order, as
+    * (funcName, executed plan). A seam built under `localCheckpoint`
+    * is an execution of its own (funcName "localCheckpoint"), so the
+    * joins it hides from the query's final plan are pinned here. The
+    * query runs on a fresh session, so its [[Seams.memo]] builds run
+    * again, and ends with a `collect`. */
+  private def captured(name: String): Seq[(String, SparkPlan)] = {
+    val fresh = spark.newSession()
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    fresh.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(fresh, sf)
+      df.collect()
+      // listener events arrive asynchronously but in order, so the
+      // final collect's event comes last
+      def reported = seen.asScala.exists(_._2 eq df.queryExecution)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!reported && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(reported, s"$name: the final collect was never reported")
+      seen.asScala.toSeq.map { case (f, qe) => f -> qe.executedPlan }
+    } finally {
+      fresh.listenerManager.unregister(listener)
+      Seams.release(fresh)
+    }
+  }
+
+  /** The plans of the `localCheckpoint` builds among `ex`. */
+  private def builds(ex: Seq[(String, SparkPlan)]): Seq[SparkPlan] =
+    ex.collect { case ("localCheckpoint", p) => p }
 
   test("q03: dimension filters are pushed into the parquet scans") {
     val p = plan("q03_shipping_priority")
@@ -87,13 +131,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pairwise dedup operators never fall back to nested-loop joins") {
-    // the registry entries materialize through localCheckpoint, so plan
-    // tests inspect the lazy builders the runtime path is built from
-    Seq(
-      "dd03" -> dedup.Dedup.ngramPairsPlan(spark, sf),
-      "dd05" -> dedup.Dedup.minhashLshPlan(spark, sf)
-    ).foreach { case (q, df) =>
-      val p = df.queryExecution.executedPlan.toString
+    // the registry entries build their pair set under localCheckpoint,
+    // so the candidate join is pinned in that build's own execution
+    Seq("dd03_ngram_jaccard", "dd05_minhash_lsh").foreach { q =>
+      val ex = captured(q)
+      val build = builds(ex).mkString("\n")
+      val p = ex.map(_._2).mkString("\n")
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q has a nested loop:\n$p")
@@ -106,8 +149,8 @@ class PlanSpec extends AnyFunSuite {
       // cardinality grows with the data — never from fixed-key-space
       // blocking like (lang, length-bucket), whose per-block pair count
       // grows O(n²) with the corpus
-      assert(p.contains("hashpartitioning(band") ||
-        "BroadcastHashJoin \\[band".r.findFirstIn(p).isDefined,
+      assert(build.contains("hashpartitioning(band") ||
+        "BroadcastHashJoin \\[band".r.findFirstIn(build).isDefined,
         s"$q candidates not keyed on (band, bkey):\n$p")
       assert(!p.contains("hashpartitioning(lang"),
         s"$q still blocks on the fixed (lang, bucket) key space:\n$p")
@@ -116,13 +159,22 @@ class PlanSpec extends AnyFunSuite {
 
   test("dd06: pair candidates come from a (band, bkey) equi-join, " +
     "not an all-pairs join") {
-    val p = dedup.Dedup.embedNearDupPlan(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), s"dd06 has a cartesian:\n$p")
+    val ex = captured("dd06_embed_neardup")
+    // at this scale AQE re-plans the candidate join as a broadcast at
+    // runtime, so the pin reads the pair build's plan as planned (the
+    // adaptive plan's input: join strategies chosen, exchanges not yet
+    // inserted)
+    val p = builds(ex).map {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case b => b
+    }.mkString("\n")
+    assert(!ex.map(_._2).mkString("\n").contains("CartesianProduct"),
+      s"dd06 has a cartesian:\n$p")
     // the ONLY nested-loop allowed is the 32-row plane broadcast (a
     // map-side flatMap); doc×doc candidates must equi-join on the
     // banded signature key
-    assert(p.contains("hashpartitioning(band"),
+    assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[band"
+      .r.findFirstIn(p).isDefined,
       s"dd06 candidate join is not keyed on (band, bkey):\n$p")
     // the bands subtree appears once per side of the candidate
     // self-join, so the plane attach shows up at most twice
@@ -232,15 +284,17 @@ class PlanSpec extends AnyFunSuite {
 
   test("txt38: every GD step reduces to a 1-row gradient via map-side " +
     "partials; weight state broadcasts back; no windows, no shuffled joins") {
-    // inspect the LAZY training plan (the registry query rides the
-    // per-session checkpointed model, which truncates lineage to
-    // ExistingRDD scans — the ngramPairsPlan precedent)
-    val p = graft.text.TextAnalysis.lgdTrainPlan(spark, sf)
-      .queryExecution.executedPlan.toString
+    // the registry query rides the per-session checkpointed model:
+    // each GD step is checkpointed as it is built, so each step is its
+    // own execution
+    val ex = captured("txt38_logistic_quality")
+    val steps = builds(ex).map(_.toString)
+    val p = ex.map(_._2).mkString("\n")
+    assert(steps.size === 6, s"txt38 expected 6 checkpointed steps:\n$p")
     // the per-step scan must compress to one row per partition BEFORE
     // any exchange (the 1-row group key makes partials the whole game)
-    assert("partial_sum".r.findFirstIn(p).isDefined,
-      s"txt38 gradient is not partial-first:\n$p")
+    steps.foreach(step => assert("partial_sum".r.findFirstIn(step).isDefined,
+      s"txt38 gradient is not partial-first:\n$step"))
     // the 1-row weight state rides a broadcast, never a shuffle; and
     // nothing in the trajectory needs a ranking window
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
@@ -288,9 +342,7 @@ class PlanSpec extends AnyFunSuite {
     // broadcast raw: the only broadcast allowed is the sketch itself
     // (a codegen'd might_contain probe); hits must flow through a
     // shuffled join
-    val df = graft.dedup.Dedup.decontaminateBloomPlan(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = captured("dd10_bloom_decontaminate").map(_._2).mkString("\n")
     // the probe is Spark's BloomFilterMightContain expression pushed
     // into the scan-side filter — codegen'd, never a Scala-UDF closure
     assert(p.contains("might_contain"), s"dd10 bloom prefilter missing:\n$p")
@@ -310,11 +362,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("mm05: phash candidates come from a (band, bkey) equi-join") {
-    val p = multimodal.Multimodal.phashNearDupPlan(spark, sf)
-      .queryExecution.executedPlan.toString
+    val ex = captured("mm05_phash_neardup")
+    val build = builds(ex).mkString("\n")
+    val p = ex.map(_._2).mkString("\n")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), s"mm05 pairwise fallback:\n$p")
-    assert(p.contains("hashpartitioning(band") || p.contains("BroadcastHashJoin"),
+    assert(build.contains("hashpartitioning(band") ||
+      "BroadcastHashJoin \\[band".r.findFirstIn(build).isDefined,
       s"mm05 candidate join is not keyed on (band, bkey):\n$p")
   }
 
@@ -370,13 +424,17 @@ class PlanSpec extends AnyFunSuite {
 
   test("dd13: containment pairs come from a gram equi-join — no " +
     "cartesian, no nested loop") {
-    // the lazy twin: the runtime query checkpoints its shared seams,
-    // which would hide the join shape behind an ExistingRDD scan
-    val p = dedup.Dedup.containmentPairsPlan(spark, sf)
-      .queryExecution.executedPlan.toString
+    // the shared seams are checkpointed builds of their own; the gram
+    // self-join runs in the query's final plan over them
+    val ex = captured("dd13_containment")
+    val p = ex.map(_._2).mkString("\n")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"dd13 pair stage is not an equi-join:\n$p")
+    val pairs = ex.collect { case ("collect", q) => q }.mkString("\n")
+    assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[gram"
+      .r.findFirstIn(pairs).isDefined,
+      s"dd13 pairs are not a gram-keyed join:\n$pairs")
   }
 
   test("sim10: assignment and means are hash aggregates — no window " +

@@ -19,7 +19,7 @@ class ClusterSplitSpec extends AnyFunSuite {
     val n = Dedup.docsAug(spark, dir).count()
     assert(asg.count() == n, "split assignment lost or duplicated docs")
     val byDoc = asg.select(col("doc_id").as("id"), col("split"))
-    val pairs = Dedup.ngramPairsPlan(spark, dir)
+    val pairs = Dedup.minhashLsh(spark, dir)
     val leaked = pairs
       .join(byDoc.withColumnRenamed("split", "sa"),
         pairs("id_a") === byDoc("id")).drop("id")
